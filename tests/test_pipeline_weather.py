@@ -76,10 +76,19 @@ def test_bronze_last_write_wins_on_duplicate_measurements(spark, bronze):
     assert checked > 10
 
 
-def test_bronze_dedup_idempotent(long_df, bronze):
+def test_bronze_exact_redelivery_collapses(spark, bronze):
+    """The fixture plants 25 full-row duplicates (same seq, same value).
+    Bronze over the rows with them removed must be the same table."""
     from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
+    from weather_analysis_bigdata__spark.pipeline.schemas import NOAA_LONG_SCHEMA
 
-    assert build_bronze(long_df).count() == bronze.count()
+    rows = noaa_long_rows()
+    unique = list(dict.fromkeys(rows))
+    assert len(rows) - len(unique) == 25
+    once = build_bronze(spark.createDataFrame(unique, NOAA_LONG_SCHEMA))
+    assert once.schema == bronze.schema
+    assert bronze.exceptAll(once).count() == 0
+    assert once.exceptAll(bronze).count() == 0
 
 
 def test_bronze_types_match_declared_schema(bronze):

@@ -96,6 +96,21 @@ def test_unpivot_is_shuffle_free(spark, sf_dir, registry):
     assert n_shuffles(plan) == 0
 
 
+def test_bronze_is_one_hash_aggregate_one_shuffle(spark):
+    """Bronze folds the long→wide pivot and last-write-wins into one
+    grouped aggregate: exactly one shuffle, and no sort-based aggregate
+    (a struct-ordered tie-break would plan as Sort + SortAggregate)."""
+    from tests.fixtures import noaa_long_rows
+    from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
+    from weather_analysis_bigdata__spark.pipeline.schemas import NOAA_LONG_SCHEMA
+
+    long_df = spark.createDataFrame(noaa_long_rows(), NOAA_LONG_SCHEMA)
+    plan = plan_of(build_bronze(long_df))
+    assert n_shuffles(plan) == 1, plan
+    assert "HashAggregate" in plan
+    assert "SortAggregate" not in plan, plan
+
+
 def test_cached_layer_reads_from_memory(spark, sf_dir):
     """Materializing a layer with cache() must turn downstream scans
     into InMemoryTableScan — the §3.2 fix for the reference's

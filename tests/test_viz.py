@@ -97,14 +97,48 @@ def test_geo_map_is_animated_with_one_marker_per_station(gallery):
         assert len(anims[0].get("values").split(";")) > 1
 
 
+class _CountingFrame:
+    """Stand-in for a plot-sized Gold DataFrame that counts its collects."""
+
+    def __init__(self, rows):
+        self.rows = rows
+        self.collects = 0
+
+    def collect(self):
+        self.collects += 1
+        return list(self.rows)
+
+
+def test_geo_map_collects_its_frame_once(tmp_path):
+    """render_geo_map must run its Gold aggregate once: one collect feeds
+    both the frame list and the per-frame values."""
+    from weather_analysis_bigdata__spark.viz import render_geo_map
+
+    frame = _CountingFrame(
+        [
+            {"station": sid, "month_year": f"2024-0{m}", "v": float(i + m)}
+            for i, (sid, _n, _la, _lo) in enumerate(STATIONS)
+            for m in (1, 2, 3)
+        ]
+    )
+    stations = _CountingFrame(
+        [
+            {"station": sid, "latitude": lat, "longitude": lon}
+            for sid, _n, lat, lon in STATIONS
+        ]
+    )
+    path = render_geo_map(frame, stations, "v", str(tmp_path / "geo.svg"))
+    assert frame.collects == 1
+    assert len(ET.parse(path).getroot().findall(f".//{SVG_NS}circle")) == len(
+        STATIONS
+    )
+
+
 def test_raster_twins_always_render(gallery):
-    """Every SVG figure gains a PNG raster twin: matplotlib (Agg) when
-    importable — the reference's plotly/matplotlib fidelity path — and
-    the dependency-free viz_raster encoder otherwise, so the raster
-    path EXECUTES in this matplotlib-less container instead of
-    permanently skipping (round-3 verdict item 8). Each twin must be a
-    spec-valid PNG: signature, IHDR dimensions, decompressible IDAT of
-    exactly height*(1+width*3) filtered bytes."""
+    """Every SVG figure gains a PNG raster twin from the dependency-free
+    viz_raster encoder. Each twin must be a spec-valid PNG: signature,
+    IHDR dimensions, decompressible IDAT of exactly height*(1+width*3)
+    filtered bytes."""
     import os
     import struct
     import zlib

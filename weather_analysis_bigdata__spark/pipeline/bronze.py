@@ -1,4 +1,4 @@
-"""Bronze layer: long→wide pivot + full-row dedup + schema enforcement.
+"""Bronze layer: long → wide in one hash aggregate, with schema enforcement.
 
 Reference behavior reproduced (SURVEY.md §2.2 R1/R2):
 
@@ -6,15 +6,16 @@ Reference behavior reproduced (SURVEY.md §2.2 R1/R2):
   paging the NOAA API (Weather_API.py:76-91) — a manual PIVOT with
   last-write-wins on duplicate (date, station, datatype) keys — then
   ``drop_duplicates`` on the materialized frame (Weather_API.py:117-120).
-- Here the pivot is a single Spark hash aggregate with an explicit
-  pivot-value list (no extra distinct scan — SURVEY §7.3), and
-  last-write-wins is made *deterministic under any partitioning* with
-  ``max_by(value, seq)`` over the ingest sequence number instead of an
+- Here both are one Spark aggregate grouped on (date, station, lat, lon)
+  with one conditional ``max_by`` per whitelisted datatype.
+  Last-write-wins is deterministic under any partitioning because it
+  orders on the ingest sequence number ``seq`` instead of an
   order-dependent ``last()``.
+  The wide rows are unique on their group keys, so the reference's
+  full-row dedup has nothing left to remove.
 
-At 100 TB: one shuffle on (date, station); the pivot list is fixed at 10
-columns so the aggregate state is tiny; output written as Parquet
-partitioned by year for downstream partition pruning.
+At 100 TB: one shuffle on the group keys (partial + final hash
+aggregate); the aggregate state is 10 (value, seq) pairs per row.
 """
 
 from __future__ import annotations
@@ -25,36 +26,31 @@ from pyspark.sql import functions as F
 from weather_analysis_bigdata__spark.pipeline.schemas import COLUMNS_MAPPING
 
 
-def pivot_long_to_wide(long_df: DataFrame) -> DataFrame:
+def build_bronze(long_df: DataFrame) -> DataFrame:
     """NOAA long records (date, station, lat, lon, datatype, value, seq)
     → one wide row per (date, station).
 
-    Only whitelisted datatypes survive (Weather_API.py:78); duplicate
+    Only whitelisted datatypes survive (Weather_API.py:78). Duplicate
     (date, station, datatype) measurements resolve to the highest-seq
-    value (last-write-wins, deterministic).
+    value (last-write-wins). ``seq`` is unique per delivered measurement,
+    so an exact re-delivery (same ``seq``, same value) collapses into one
+    Bronze value. A conflicting value at an equal ``seq`` is outside this
+    contract and resolves to either value.
     """
-    keys = list(COLUMNS_MAPPING)
-    pivoted = (
-        long_df.filter(F.col("datatype").isin(keys))
+    wide = (
+        long_df.filter(F.col("datatype").isin(list(COLUMNS_MAPPING)))
         .groupBy("date", "station", "latitude", "longitude")
-        .pivot("datatype", keys)
-        .agg(F.max_by("value", "seq"))
+        .agg(
+            *(
+                F.max_by(
+                    "value", F.when(F.col("datatype") == code, F.col("seq"))
+                ).alias(col)
+                for code, col in COLUMNS_MAPPING.items()
+            )
+        )
     )
-    renamed = pivoted
-    for code, col in COLUMNS_MAPPING.items():
-        renamed = renamed.withColumnRenamed(code, col)
     # Declared types (Weather_API.py:186-188): wind direction is integral
     # degrees; weather_type_1 is a categorical string flag.
-    return renamed.withColumn(
+    return wide.withColumn(
         "wind_direction_2min", F.col("wind_direction_2min").cast("int")
     ).withColumn("weather_type_1", F.col("weather_type_1").cast("string"))
-
-
-def dedup_full_rows(df: DataFrame) -> DataFrame:
-    """Full-row dedup (Weather_API.py:119 drop_duplicates → dropDuplicates)."""
-    return df.dropDuplicates()
-
-
-def build_bronze(long_df: DataFrame) -> DataFrame:
-    """Long-format ingest → deduplicated wide Bronze fact table."""
-    return dedup_full_rows(pivot_long_to_wide(long_df))

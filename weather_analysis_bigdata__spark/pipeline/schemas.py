@@ -14,7 +14,11 @@ from pyspark.sql import types as T
 #: the API connector emits before the Bronze pivot (Weather_API.py:71-91).
 #: ``seq`` is the ingest sequence number: it makes the reference's
 #: last-write-wins duplicate policy (dict overwrite, Weather_API.py:83-91)
-#: deterministic under any partitioning (max_by(value, seq)).
+#: deterministic under any partitioning (max_by(value, seq)). Contract:
+#: ``seq`` is unique per delivered measurement, so an exact re-delivery
+#: (same ``seq``, same value) collapses into one Bronze value. A
+#: conflicting value at an equal ``seq`` is outside the contract; Bronze
+#: does not resolve it.
 NOAA_LONG_SCHEMA = T.StructType(
     [
         T.StructField("date", T.StringType()),  # yyyy-MM-dd'T'HH:mm:ss

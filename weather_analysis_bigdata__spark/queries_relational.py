@@ -32,10 +32,6 @@ from weather_analysis_bigdata__spark.sources.files import load_table
 REVENUE_SQL = f"SUM({sql_dec('l_extendedprice')} * (1 - {sql_dec('l_discount')}))"
 
 
-def _revenue() -> F.Column:
-    return F.sum(dec("l_extendedprice") * (F.lit(1) - dec("l_discount")))
-
-
 # ---------------------------------------------------------------------------
 # Multi-table inner joins + agg + top-k
 # ---------------------------------------------------------------------------

@@ -304,45 +304,3 @@ def configure_for_oracle_parity(spark: SparkSession) -> None:
     """Set runtime-mutable conf needed for deterministic, ANSI-comparable
     results on a session we did not build (the driver passes its own)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
-#: The 1000-executor / 100 TB submission profile this engine is designed
-#: against — pass to spark-submit (``--conf k=v``) or merge into the
-#: builder. Values are the reasoning anchor, not magic numbers: re-derive
-#: when executor shape changes.
-CLUSTER_100TB_CONF = {
-    # 5 cores/executor is the concurrency sweet spot (HDFS/S3 client
-    # throughput degrades beyond it); 1000 executors × 5 = 5000 tasks in
-    # flight.
-    "spark.executor.cores": "5",
-    # 128 MiB parquet split × ~5 concurrent tasks × 2-3× working-set
-    # expansion fits comfortably; the rest of the 32 GiB is shuffle/cache.
-    "spark.executor.memory": "24g",
-    "spark.executor.memoryOverhead": "4g",
-    # Start shuffles WIDE (4× total cores) and let AQE coalesce down —
-    # undershooting parallelism is unrecoverable, overshooting is free
-    # after coalescing.
-    "spark.sql.shuffle.partitions": "20000",
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "128m",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # A 100 TB scan at 128 MiB splits is ~800k tasks; keep task launch
-    # cheap and results small.
-    "spark.sql.files.maxPartitionBytes": "134217728",
-    # zstd everywhere: ~30-50% smaller shuffle/output than lz4/snappy at
-    # similar decode cost (see parquet_codec_roundtrip).
-    "spark.io.compression.codec": "zstd",
-    "spark.sql.parquet.compression.codec": "zstd",
-    # Dim tables up to 256 MiB broadcast — at this executor memory the
-    # dedup/ANN side tables (centroids, codebooks, eval n-grams, probe
-    # lists) all fit.
-    "spark.sql.autoBroadcastJoinThreshold": str(256 * 1024 * 1024),
-    # Retries mask stragglers on 1000 machines; speculation caps p99
-    # stage time without duplicating whole stages.
-    "spark.speculation": "true",
-    "spark.speculation.quantile": "0.95",
-    # Arrow transfer for every Pandas-UDF stage (multimodal decode).
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.session.timeZone": "UTC",
-}

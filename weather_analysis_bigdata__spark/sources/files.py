@@ -96,18 +96,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         df.createOrReplaceTempView(name)
 
 
-def read_csv_with_schema(
-    spark: SparkSession, path: str, schema: T.StructType, header: bool = True
-) -> DataFrame:
-    """CSV scan with an explicit schema (no inference pass over the data).
-
-    Replaces the reference's pandas ``read_csv`` → ``createDataFrame``
-    bridge (Weather_API.py:154,194), which funnels all bytes through the
-    driver and silently drops the declared schema (SURVEY.md §0).
-    """
-    return spark.read.schema(schema).option("header", header).csv(path)
-
-
 def write_parquet(
     df: DataFrame,
     path: str,

@@ -8,13 +8,12 @@ of each figure lives in pipeline/gold.py (plot-sized aggregates only);
 this module is the thin renderer the notebook used plotly/matplotlib
 for.
 
-Rendering strategy: **pure-Python SVG** (no third-party dependency —
-matplotlib/plotly are not in this container). SVG is a real, viewable
-deliverable: line charts with axes and ticks, color-scaled heatmaps,
-and an *animated* geo map via SVG/SMIL ``<animate>`` (the plotly
-``animation_frame`` analogue). If matplotlib IS importable, each figure
-is additionally rendered as a PNG through the Agg backend — gated
-behind an import-try so the SVG path never depends on it.
+Rendering strategy: **pure-Python SVG** (no third-party dependency).
+SVG is a real, viewable deliverable: line charts with axes and ticks,
+color-scaled heatmaps, and an *animated* geo map via SVG/SMIL
+``<animate>`` (the plotly ``animation_frame`` analogue). Each figure
+also gets a PNG twin from the dependency-free rasterizer in
+viz_raster.py.
 
 Scale note: every renderer consumes an already-aggregated DataFrame
 (O(stations×months) rows, not O(raw)); ``collect()`` here is the
@@ -27,6 +26,12 @@ import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
+
+from weather_analysis_bigdata__spark.viz_raster import (
+    png_heatmap,
+    png_lines,
+    png_scatter,
+)
 
 W, H = 800, 420  # canvas
 ML, MR, MT, MB = 60, 20, 30, 45  # margins
@@ -119,119 +124,6 @@ class _SVG:
         return path
 
 
-def _mpl():
-    """matplotlib.pyplot with the Agg backend, or None — every raster
-    twin is gated on this so the SVG deliverables never depend on the
-    (environment-optional) dependency."""
-    try:
-        import matplotlib
-
-        matplotlib.use("Agg")
-        import matplotlib.pyplot as plt
-
-        return plt
-    except ImportError:
-        return None
-
-
-def _maybe_png(svg_path: str, xs, series: dict, title: str = "") -> None:
-    """PNG twin of a line figure: matplotlib (Agg) when importable,
-    else the dependency-free rasterizer (viz_raster.py) — since round
-    4 the twin always renders, so the raster path is testable in
-    matplotlib-less containers instead of permanently skipped."""
-    plt = _mpl()
-    if plt is None:
-        from weather_analysis_bigdata__spark.viz_raster import png_lines
-
-        png_lines(svg_path.replace(".svg", ".png"), xs, series)
-        return
-    fig, ax = plt.subplots(figsize=(8, 4.2))
-    for label, ys in series.items():
-        ax.plot(xs, ys, label=label)
-    ax.set_title(title)
-    ax.legend()
-    fig.savefig(svg_path.replace(".svg", ".png"))
-    plt.close(fig)
-
-
-def _maybe_png_heatmap(
-    svg_path: str, r_keys, c_keys, vals: dict, title: str = ""
-) -> None:
-    """Raster twin of render_heatmap (same cell data contract): an
-    imshow grid with the same blue→red scale direction; falls back to
-    the dependency-free rasterizer when matplotlib is absent."""
-    plt = _mpl()
-    if plt is None:
-        from weather_analysis_bigdata__spark.viz_raster import png_heatmap
-
-        png_heatmap(svg_path.replace(".svg", ".png"), r_keys, c_keys, vals)
-        return
-    import math
-
-    grid = [
-        [
-            vals.get((rk, ck), math.nan)
-            for ck in c_keys
-        ]
-        for rk in r_keys
-    ]
-    fig, ax = plt.subplots(figsize=(8, 4.2))
-    im = ax.imshow(grid, aspect="auto", cmap="coolwarm")
-    ax.set_yticks(range(len(r_keys)), [str(k) for k in r_keys])
-    ax.set_xticks(range(len(c_keys)), [str(k) for k in c_keys])
-    ax.set_title(title)
-    fig.colorbar(im, ax=ax)
-    fig.savefig(svg_path.replace(".svg", ".png"))
-    plt.close(fig)
-
-
-def _maybe_png_geo(
-    svg_path: str, stations: dict, frame_vals: dict, frames, title: str = ""
-) -> None:
-    """Raster twin of render_geo_map: PNG cannot animate, so it renders
-    the LAST frame's scatter (size+color by value) — the plotly
-    animation's final state — keeping the same data contract; falls
-    back to the dependency-free rasterizer when matplotlib is absent."""
-    plt = _mpl()
-    if plt is None:
-        from weather_analysis_bigdata__spark.viz_raster import png_scatter
-
-        last = frames[-1]
-        vs = [v for (sid, f), v in frame_vals.items() if f == last]
-        vlo, vhi = (min(vs), max(vs)) if vs else (0.0, 1.0)
-        span = (vhi - vlo) or 1.0
-        pts = [
-            (lon, lat, (frame_vals[(sid, last)] - vlo) / span)
-            for sid, (lon, lat) in sorted(stations.items())
-            if (sid, last) in frame_vals
-        ]
-        png_scatter(svg_path.replace(".svg", ".png"), pts)
-        return
-    last = frames[-1]
-    fig, ax = plt.subplots(figsize=(8, 4.2))
-    xs, ys, ss, cs, labels = [], [], [], [], []
-    vs = [v for (sid, f), v in frame_vals.items() if f == last]
-    vlo, vhi = (min(vs), max(vs)) if vs else (0.0, 1.0)
-    span = (vhi - vlo) or 1.0
-    for sid, (lon, lat) in sorted(stations.items()):
-        v = frame_vals.get((sid, last))
-        if v is None:
-            continue
-        t = (v - vlo) / span
-        xs.append(lon)
-        ys.append(lat)
-        ss.append(30 + 170 * t)
-        cs.append(v)
-        labels.append(sid)
-    sc = ax.scatter(xs, ys, s=ss, c=cs, cmap="coolwarm", alpha=0.8)
-    for x, y, sid in zip(xs, ys, labels):
-        ax.annotate(str(sid), (x, y), fontsize=7)
-    ax.set_title(f"{title} ({last})")
-    fig.colorbar(sc, ax=ax)
-    fig.savefig(svg_path.replace(".svg", ".png"))
-    plt.close(fig)
-
-
 # ---------------------------------------------------------------------------
 # Figure renderers (each consumes a plot-sized gold aggregate)
 # ---------------------------------------------------------------------------
@@ -280,8 +172,8 @@ def render_time_series(
             f'<text x="{ML + PW - 5}" y="{MT + 14 + 14 * ci}" text-anchor="end" '
             f'font-family="sans-serif" font-size="11" fill="{color}">{_esc(c)}</text>'
         )
-    _maybe_png(
-        path,
+    png_lines(
+        path.replace(".svg", ".png"),
         xs,
         {c: [r[c] for r in rows] for c in y_cols},
     )
@@ -338,7 +230,7 @@ def render_trend(
         f'<text x="{ML + 8}" y="{MT + 14}" font-family="sans-serif" '
         f'font-size="11">slope={t.slope:.4f}/yr</text>'
     )
-    _maybe_png(path, years, {"mean": vals, "fit": fit})
+    png_lines(path.replace(".svg", ".png"), years, {"mean": vals, "fit": fit})
     from weather_analysis_bigdata__spark.viz_interactive import (
         render_interactive_timeseries,
     )
@@ -393,7 +285,7 @@ def render_heatmap(
             f'text-anchor="middle" font-family="sans-serif" font-size="10">'
             f"{_esc(ck)}</text>"
         )
-    _maybe_png_heatmap(path, r_keys, c_keys, vals, title)
+    png_heatmap(path.replace(".svg", ".png"), r_keys, c_keys, vals)
     return svg.save(path)
 
 
@@ -410,14 +302,15 @@ def render_geo_map(
     each station's marker radius + color cycle through the per-frame
     values with SMIL ``<animate>``, 1 frame/second, looping — a real
     animation in any browser, zero dependencies."""
-    frames = sorted({r[frame_col] for r in frame_df.collect()})
+    frame_rows = frame_df.collect()
+    frames = sorted({r[frame_col] for r in frame_rows})
     if not frames:
         raise ValueError("no animation frames")
     stations = {r["station"]: (float(r["longitude"]), float(r["latitude"]))
                 for r in station_df.collect()}
     vals = {
         (r["station"], r[frame_col]): float(r[val_col])
-        for r in frame_df.collect()
+        for r in frame_rows
         if r[val_col] is not None
     }
     lons = [lon for lon, _ in stations.values()]
@@ -468,7 +361,20 @@ def render_geo_map(
         )
         + "</text>"
     )
-    _maybe_png_geo(path, stations, vals, frames, title)
+    # PNG twin: a raster cannot animate, so it shows the last frame's
+    # scatter (size + color by value), the plotly animation's final state.
+    last = frames[-1]
+    last_vals = {sid: v for (sid, f), v in vals.items() if f == last}
+    lo = min(last_vals.values(), default=0.0)
+    span = (max(last_vals.values(), default=0.0) - lo) or 1.0
+    png_scatter(
+        path.replace(".svg", ".png"),
+        [
+            (lon, lat, (last_vals[sid] - lo) / span)
+            for sid, (lon, lat) in sorted(stations.items())
+            if sid in last_vals
+        ],
+    )
     return svg.save(path)
 
 

@@ -2,11 +2,10 @@
 
 The reference renders raster/interactive figures via
 matplotlib/plotly (Weather_API.py:533-575, 856-895, 995-1012,
-1045-1068). viz.py's primary deliverables are pure-SVG; the raster
-TWINS were matplotlib-gated and therefore never executed in
-environments without it (a permanent pytest skip). This module makes
-the raster path testable everywhere, in the same spirit as the
-pure-Python media codecs in operators/multimodal.py (PPM/WAV/Y4M):
+1045-1068). viz.py's primary deliverables are pure-SVG; this module
+renders the PNG twin of every figure with the standard library only,
+in the same spirit as the pure-Python media codecs in
+operators/multimodal.py (PPM/WAV/Y4M):
 
 - :func:`write_png` — a minimal, spec-correct PNG encoder (public
   format: PNG signature, IHDR/IDAT/IEND chunks, zlib-deflated
@@ -17,9 +16,8 @@ pure-Python media codecs in operators/multimodal.py (PPM/WAV/Y4M):
   sufficient for the three figure shapes the twins need: multi-line
   series, heatmap grid, scatter map.
 
-matplotlib, when importable, still takes precedence in viz.py — this
-is the fallback that keeps the twin CONTRACT (a .png next to every
-.svg, same data) executable in minimal containers.
+It is viz.py's only raster path: every ``render_*`` writes a .png
+next to its .svg from the same data.
 """
 
 from __future__ import annotations
@@ -165,7 +163,7 @@ class Canvas:
 
 
 # ---------------------------------------------------------------------------
-# Figure-shaped fallbacks (same call contracts as viz.py's _maybe_png*)
+# Figure-shaped twins (called by viz.py's render_* functions)
 # ---------------------------------------------------------------------------
 _W, _H = 800, 420
 _ML, _MR, _MT, _MB = 60, 20, 30, 40  # margins
@@ -215,7 +213,7 @@ def png_lines(path: str, xs, series: dict) -> str:
 
 def png_heatmap(path: str, r_keys, c_keys, vals: dict) -> str:
     """Heatmap grid with the blue→red scale (same direction as the SVG
-    and matplotlib coolwarm twins); missing cells stay background."""
+    figure); missing cells stay background."""
     c = Canvas(_W, _H)
     present = [v for v in vals.values() if v is not None]
     vlo, vhi = (min(present), max(present)) if present else (0.0, 1.0)
