@@ -3,6 +3,10 @@
 
 from __future__ import annotations
 
+import contextlib
+import hashlib
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,6 +45,32 @@ def silver(bronze, station_dim):
     from weather_analysis_bigdata__spark.pipeline.silver import build_silver
 
     return build_silver(bronze, station_dim).cache()
+
+
+@contextlib.contextmanager
+def _session_conf(spark, key, value):
+    """Set one session conf for the block and restore it afterwards."""
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+
+
+def _parquet_files(root):
+    """{path relative to root: SHA-256} of every parquet file under root."""
+    out = {}
+    for d, _, fs in os.walk(root):
+        for f in fs:
+            if f.endswith(".parquet"):
+                p = os.path.join(d, f)
+                with open(p, "rb") as fh:
+                    out[os.path.relpath(p, root)] = hashlib.sha256(fh.read()).hexdigest()
+    return out
 
 
 # ---------------------------------------------------------------- Bronze
@@ -159,6 +189,65 @@ def test_silver_date_parse(silver):
     r = silver.select("date", "Date_1", "year").first()
     assert str(r.Date_1) == r.date[:10]
     assert r.year == int(r.date[:4])
+
+
+def test_silver_write_is_one_sorted_file_per_year(spark, silver, tmp_path):
+    """The year-partitioned sink writes one file per year, its rows in
+    (station, Date_1) order. AQE coalescing is off so that a shuffle
+    spreading a year over several tasks would show as several files."""
+    import pyarrow.parquet as pq
+
+    from weather_analysis_bigdata__spark.sources.files import write_parquet
+
+    out = str(tmp_path / "silver")
+    with _session_conf(spark, "spark.sql.adaptive.coalescePartitions.enabled", "false"):
+        write_parquet(silver, out, partition_by=("year",))
+    parts = sorted(d for d in os.listdir(out) if d.startswith("year="))
+    assert parts == ["year=2023", "year=2024"]
+    for d in parts:
+        files = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+        t = pq.read_table(os.path.join(out, d, files[0]), columns=["station", "Date_1"])
+        keys = list(zip(t.column("station").to_pylist(), t.column("Date_1").to_pylist()))
+        assert len(keys) > 0 and keys == sorted(keys), d
+
+
+def test_rebuild_years_replaces_only_its_years(spark, station_dim, tmp_path):
+    """Under Spark's default static overwrite mode, rebuilding one year
+    leaves every other year's files byte-identical, and the rebuilt year
+    equals the same year of a fresh full build."""
+    from weather_analysis_bigdata__spark.pipeline.backfill import rebuild_years
+    from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
+    from weather_analysis_bigdata__spark.pipeline.schemas import (
+        NOAA_LONG_SCHEMA,
+        SILVER_COLUMNS,
+    )
+    from weather_analysis_bigdata__spark.pipeline.silver import build_silver
+    from weather_analysis_bigdata__spark.sources.files import write_parquet
+
+    landing = spark.createDataFrame(
+        noaa_long_rows(years=(2022, 2023, 2024)), NOAA_LONG_SCHEMA
+    )
+    full = build_silver(build_bronze(landing), station_dim)
+    out = str(tmp_path / "silver")
+    with _session_conf(spark, "spark.sql.sources.partitionOverwriteMode", "static"):
+        write_parquet(full, out, partition_by=("year",))
+        before = _parquet_files(out)
+        rebuild_years(landing, station_dim, out, [2023])
+    after = _parquet_files(out)
+
+    def untouched(files):
+        return {p: h for p, h in files.items() if not p.startswith("year=2023")}
+
+    assert {p.split(os.sep)[0] for p in before} == {
+        "year=2022", "year=2023", "year=2024"
+    }
+    assert untouched(after) == untouched(before)
+    rebuilt = spark.read.parquet(out).filter(F.col("year") == 2023).select(*SILVER_COLUMNS)
+    fresh = full.filter(F.col("year") == 2023)
+    assert rebuilt.count() > 0
+    assert rebuilt.exceptAll(fresh).count() == 0
+    assert fresh.exceptAll(rebuilt).count() == 0
 
 
 # ------------------------------------------------------------------ Gold

@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from weather_analysis_bigdata__spark.plans.inspect import (
+    exchange_keys,
     has_take_ordered,
     n_global_windows,
     n_broadcast_joins,
@@ -109,6 +110,39 @@ def test_bronze_is_one_hash_aggregate_one_shuffle(spark):
     assert n_shuffles(plan) == 1, plan
     assert "HashAggregate" in plan
     assert "SortAggregate" not in plan, plan
+
+
+def test_exchange_keys_names_bronze_group_keys(spark):
+    """exchange_keys strips ``#id`` suffixes and the partition count
+    from each shuffle's hashpartitioning expression."""
+    from tests.fixtures import noaa_long_rows
+    from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
+    from weather_analysis_bigdata__spark.pipeline.schemas import NOAA_LONG_SCHEMA
+
+    long_df = spark.createDataFrame(noaa_long_rows(), NOAA_LONG_SCHEMA)
+    keys = exchange_keys(plan_of(build_bronze(long_df)))
+    assert keys == [["date", "station", "latitude", "longitude"]]
+
+
+def test_silver_hashes_on_year_and_window_reuses_it(spark):
+    """Silver's one shuffle is the hash on ``year``: the wind window's
+    (year, latitude, longitude) clustering reuses it, so Bronze plus
+    Silver plan two shuffles and the dim join stays broadcast."""
+    from tests.fixtures import noaa_long_rows, station_dim_rows
+    from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
+    from weather_analysis_bigdata__spark.pipeline.schemas import (
+        NOAA_LONG_SCHEMA,
+        STATION_SCHEMA,
+    )
+    from weather_analysis_bigdata__spark.pipeline.silver import build_silver
+
+    long_df = spark.createDataFrame(noaa_long_rows(), NOAA_LONG_SCHEMA)
+    dim = spark.createDataFrame(station_dim_rows(), STATION_SCHEMA)
+    plan = plan_of(build_silver(build_bronze(long_df), dim))
+    assert n_shuffles(plan) == 2, plan
+    keys = exchange_keys(plan)
+    assert keys == [["date", "station", "latitude", "longitude"], ["year"]], keys
+    assert n_sortmerge_joins(plan) == 0
 
 
 def test_cached_layer_reads_from_memory(spark, sf_dir):

@@ -37,6 +37,10 @@ def test_written_layout_partitioned_by_year(rehearsal):
     parts = sorted(d for d in os.listdir(out) if d.startswith("year="))
     assert len(parts) == 72  # 1950..2021 with stride-13 day coverage
     assert parts[0] == "year=1950" and parts[-1] == "year=2021"
+    # Silver is clustered on year, so each write lands one file per year
+    for d in parts:
+        files = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
 
 
 def test_year_filter_prunes_partitions(rehearsal, spark):

@@ -132,15 +132,17 @@ def run_rehearsal(
     spark: SparkSession, out_dir: str, n_rows: int = EXPECTED_ROWS
 ) -> dict:
     """Full-layer rehearsal: generate → Bronze → Silver (written as
-    parquet **partitioned by year** for downstream pruning) → Gold
-    aggregates. Returns the written path and plot-sized gold outputs."""
+    parquet **partitioned by year** through the layer sink, one file per
+    year, for downstream pruning) → Gold aggregates. Returns the written
+    path and plot-sized gold outputs."""
     from weather_analysis_bigdata__spark.pipeline import gold
     from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
     from weather_analysis_bigdata__spark.pipeline.silver import build_silver
+    from weather_analysis_bigdata__spark.sources.files import write_parquet
 
     bronze = build_bronze(generate_noaa_long(spark, n_rows))
     silver = build_silver(bronze, station_dim_df(spark))
-    silver.write.mode("overwrite").partitionBy("year").parquet(out_dir)
+    write_parquet(silver, out_dir, partition_by=("year",))
     silver_back = spark.read.parquet(out_dir)
     return {
         "silver_path": out_dir,

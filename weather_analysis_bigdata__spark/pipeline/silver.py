@@ -17,6 +17,15 @@ Reference transform chain (Weather_API.py:305-490), re-expressed:
   :341), avg_temperature_rounded = round(..., 2) replacing the raw
   column (E5, :483-490).
 
+Layout contract (tested): Silver is hash-partitioned on ``year`` right
+after ``year`` is derived. That one Exchange also clusters the wind
+window, whose (year, latitude, longitude) groups never straddle a year,
+so Bronze plus Silver still plan two shuffles in total. One local sort
+on (year, station, Date_1) ends the chain; it also meets the
+``partitionBy("year")`` writer's required ordering, so the sink adds no
+sort. Every Silver write therefore lands each year whole in one task:
+one station-and-date-ordered file per year per write.
+
 Property guaranteed (tested): no nulls escape Silver in any imputed or
 derived column.
 """
@@ -78,9 +87,15 @@ def constant_fills(df: DataFrame) -> DataFrame:
 
 
 def build_silver(bronze: DataFrame, station_dim: DataFrame) -> DataFrame:
-    """Full Bronze → Silver chain with the reference's column contract."""
+    """Full Bronze → Silver chain with the reference's column contract.
+
+    Clustered for the year-partitioned sink: hashed on ``year`` (the
+    shuffle the wind window reuses) and sorted within each partition on
+    (year, station, Date_1), so a ``partitionBy("year")`` write emits one
+    station-and-date-ordered file per year.
+    """
     df = join_station_dim(bronze, station_dim)
-    df = df.withColumn("year", F.year("date").cast("int"))
+    df = df.withColumn("year", F.year("date").cast("int")).repartition("year")
     df = impute_wind(df)
     df = impute_avg_temperature(df)
     df = constant_fills(df)
@@ -88,4 +103,6 @@ def build_silver(bronze: DataFrame, station_dim: DataFrame) -> DataFrame:
     df = df.withColumn(
         "avg_temperature_rounded", F.round("avg_temperature", 2)
     ).drop("avg_temperature")
-    return df.select(*SILVER_COLUMNS)
+    return df.select(*SILVER_COLUMNS).sortWithinPartitions(
+        "year", "station", "Date_1"
+    )

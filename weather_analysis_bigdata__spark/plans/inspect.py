@@ -37,8 +37,52 @@ def n_sortmerge_joins(plan: str) -> int:
 
 
 def n_shuffles(plan: str) -> int:
-    """Data shuffles (Exchange) excluding broadcast exchanges."""
-    return _n_nodes(plan, "Exchange") - _n_nodes(plan, "BroadcastExchange")
+    """Data shuffles: ``Exchange`` nodes. The header match already
+    leaves out ``BroadcastExchange``."""
+    return _n_nodes(plan, "Exchange")
+
+
+def _split_top_level(args: str) -> list[str]:
+    """Comma-separated items of ``args`` that sit outside any parentheses."""
+    items, depth, cur = [], 0, []
+    for ch in args:
+        if ch == "," and depth == 0:
+            items.append("".join(cur).strip())
+            cur = []
+            continue
+        depth += {"(": 1, ")": -1}.get(ch, 0)
+        cur.append(ch)
+    items.append("".join(cur).strip())
+    return items
+
+
+def exchange_keys(plan: str) -> list[list[str]]:
+    """Partitioning keys of each shuffle Exchange, in detail-section
+    order, with ``#id`` suffixes stripped: ``hashpartitioning(year#40,
+    8)`` gives ``["year"]``. Range keys drop their sort direction; a
+    single-partition or round-robin Exchange gives ``[]``."""
+    lines = plan.splitlines()
+    out: list[list[str]] = []
+    for i, line in enumerate(lines):
+        if not re.match(r"^\(\d+\) Exchange\b", line):
+            continue
+        for t in lines[i + 1 : i + 8]:
+            if t.startswith("Arguments: "):
+                args = t[len("Arguments: ") :]
+                m = re.match(r"(?:hash|range)partitioning\(", args)
+                keys = (
+                    _split_top_level(_balanced_span(args, m.end() - 1)[1:-1])[:-1]
+                    if m
+                    else []
+                )
+                out.append(
+                    [
+                        re.sub(r" (?:ASC|DESC)\b.*$", "", re.sub(r"#\d+L?", "", k))
+                        for k in keys
+                    ]
+                )
+                break
+    return out
 
 
 def has_take_ordered(plan: str) -> bool:

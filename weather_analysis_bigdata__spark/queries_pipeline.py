@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from weather_analysis_bigdata__spark.functions.deterministic import dec, dsum, sql_dec, sql_dsum
 from weather_analysis_bigdata__spark.registry import register
-from weather_analysis_bigdata__spark.sources.files import load_table
+from weather_analysis_bigdata__spark.sources.files import load_table, write_parquet
 
 #: event_type → measure column (stands in for COLUMNS_MAPPING,
 #: Weather_API.py:34-45; 'error' is deliberately OUT of the whitelist to
@@ -322,12 +322,7 @@ def dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.filter((F.col("yr") == 1997) & (F.col("o_orderkey") % 2 == 0))
         .withColumn("o_totalprice", F.col("o_totalprice") * 2)
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        fix.write.mode("overwrite").partitionBy("yr").parquet(base)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    write_parquet(fix, base, partition_by=("yr",))
     back = spark.read.parquet(base)
     return back.groupBy(F.col("yr").cast("int").alias("yr")).agg(
         F.count(F.lit(1)).alias("n_orders"),

@@ -107,10 +107,17 @@ def write_parquet(
     Replaces the reference's CSV sinks (Weather_API.py:130, 1180-1184).
     Partitioning by low-cardinality keys (e.g. ``year``) makes downstream
     year filters prune whole directories at 100 TB.
+
+    An overwrite with ``partition_by`` replaces exactly the partitions
+    the frame holds and leaves every other partition's files untouched,
+    whatever the session's ``partitionOverwriteMode``: the dynamic mode
+    is set on this write, not on the session.
     """
     writer = df.write.mode(mode)
     if partition_by:
-        writer = writer.partitionBy(*partition_by)
+        writer = writer.partitionBy(*partition_by).option(
+            "partitionOverwriteMode", "dynamic"
+        )
     writer.parquet(path)
 
 
