@@ -134,46 +134,96 @@ def test_geo_map_collects_its_frame_once(tmp_path):
     )
 
 
-def test_raster_twins_always_render(gallery):
-    """Every SVG figure gains a PNG raster twin from the dependency-free
-    viz_raster encoder. Each twin must be a spec-valid PNG: signature,
-    IHDR dimensions, decompressible IDAT of exactly height*(1+width*3)
-    filtered bytes."""
-    import os
+def _png_pixels(path):
+    """Decode a truecolor PNG twin into an (h, w, 3) uint8 array,
+    checking it on the way: signature, CRC of every chunk, IHDR first
+    and IEND last, IDAT of exactly height*(1+width*3) filter-0 bytes."""
     import struct
     import zlib
 
-    pngs = [p.replace(".svg", ".png") for p in gallery]
-    for p in pngs:
-        assert os.path.exists(p), p
-        assert os.path.getsize(p) > 1000, p
-        with open(p, "rb") as f:
-            data = f.read()
-        assert data[:8] == b"\x89PNG\r\n\x1a\n", p
-        # walk chunks: IHDR first, one or more IDATs, IEND last
-        off = 8
-        chunks = []
-        idat = b""
-        while off < len(data):
-            (ln,) = struct.unpack(">I", data[off : off + 4])
-            tag = data[off + 4 : off + 8]
-            payload = data[off + 8 : off + 8 + ln]
-            (crc,) = struct.unpack(
-                ">I", data[off + 8 + ln : off + 12 + ln]
-            )
-            assert crc == (zlib.crc32(tag + payload) & 0xFFFFFFFF), p
-            chunks.append(tag)
-            if tag == b"IDAT":
-                idat += payload
-            if tag == b"IHDR":
-                w, h, depth, ctype = struct.unpack(">IIBB", payload[:10])
-                assert w > 0 and h > 0 and depth == 8
-            off += 12 + ln
-        assert chunks[0] == b"IHDR" and chunks[-1] == b"IEND", p
-        raw = zlib.decompress(idat)
-        # truecolor RGB (ctype 2): each scanline is 1 filter byte + 3*w
-        if ctype == 2:
-            assert len(raw) == h * (1 + 3 * w), p
+    import numpy as np
+
+    with open(path, "rb") as f:
+        data = f.read()
+    assert data[:8] == b"\x89PNG\r\n\x1a\n", path
+    off = 8
+    chunks = []
+    idat = b""
+    while off < len(data):
+        (ln,) = struct.unpack(">I", data[off : off + 4])
+        tag = data[off + 4 : off + 8]
+        payload = data[off + 8 : off + 8 + ln]
+        (crc,) = struct.unpack(">I", data[off + 8 + ln : off + 12 + ln])
+        assert crc == (zlib.crc32(tag + payload) & 0xFFFFFFFF), path
+        chunks.append(tag)
+        if tag == b"IDAT":
+            idat += payload
+        if tag == b"IHDR":
+            w, h, depth, ctype = struct.unpack(">IIBB", payload[:10])
+            assert w > 0 and h > 0 and depth == 8 and ctype == 2, path
+        off += 12 + ln
+    assert chunks[0] == b"IHDR" and chunks[-1] == b"IEND", path
+    # truecolor RGB: each scanline is 1 filter byte + 3*w
+    raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8)
+    assert raw.size == h * (1 + 3 * w), path
+    rows = raw.reshape(h, 1 + 3 * w)
+    assert not rows[:, 0].any(), path  # filter type 0 on every scanline
+    return rows[:, 1:].reshape(h, w, 3)
+
+
+def _svg_rgb(color):
+    """``#rgb``, ``#rrggbb`` or ``rgb(r,g,b)`` → (r, g, b)."""
+    if color.startswith("#"):
+        h = color[1:]
+        return tuple(bytes.fromhex(h if len(h) == 6 else "".join(c * 2 for c in h)))
+    return tuple(int(v) for v in color[4:-1].split(","))
+
+
+def test_raster_twins_always_render(gallery):
+    """Every SVG figure gains a PNG raster twin from the dependency-free
+    viz_raster encoder. Each twin must be a spec-valid PNG (checked by
+    _png_pixels) of the SVG's own width and height."""
+    import os
+
+    for p in gallery:
+        png = p.replace(".svg", ".png")
+        assert os.path.exists(png), png
+        assert os.path.getsize(png) > 1000, png
+        root = ET.parse(p).getroot()
+        h, w, _ = _png_pixels(png).shape
+        assert (w, h) == (int(root.get("width")), int(root.get("height"))), png
+
+
+def test_png_twin_matches_its_svg(gallery):
+    """The PNG twin is drawn from the SVG itself, so it shows the SVG's
+    colours: each heatmap cell's centre pixel is that cell's ``fill``
+    (same colour ramp), and every time-series stroke colour appears in
+    the raster (same palette)."""
+    heatmaps = [p for p in gallery if "heatmap_" in p]
+    assert len(heatmaps) == 2
+    for p in heatmaps:
+        img = _png_pixels(p.replace(".svg", ".png"))
+        cells = [
+            r for r in ET.parse(p).getroot().findall(f".//{SVG_NS}rect")
+            if r.get("stroke") == "white"
+        ]
+        assert cells
+        for r in cells:
+            cx = int(float(r.get("x")) + float(r.get("width")) / 2)
+            cy = int(float(r.get("y")) + float(r.get("height")) / 2)
+            want = _svg_rgb(r.get("fill"))
+            assert tuple(img[cy, cx].tolist()) == want, (p, cx, cy)
+
+    p = next(x for x in gallery if x.endswith("time_series.svg"))
+    img = _png_pixels(p.replace(".svg", ".png"))
+    colours = {tuple(c) for c in img.reshape(-1, 3).tolist()}
+    strokes = [
+        pl.get("stroke")
+        for pl in ET.parse(p).getroot().findall(f".//{SVG_NS}polyline")
+    ]
+    assert len(strokes) == 3
+    for stroke in strokes:
+        assert _svg_rgb(stroke) in colours, stroke
 
 
 def test_interactive_html_twins(gallery):

@@ -16,11 +16,11 @@ hash-checkable against DuckDB (see queries_pipeline.weather_rehearsal_e2e).
 
 Planted edge cases (same catalogue as tests/fixtures.py, §FIXTURES.md A):
 
-- ~1/7 of measurements missing            → pivot nulls
+- ~1/7 of measurements missing            → Bronze nulls
 - TAVG additionally missing for 1/3       → (min+max)/2 repair path
 - station 0 reports NO wind at all        → whole-group null → 0 fallback
 - 1/11 of measurements duplicated at a
-  higher seq with value+10                → last-write-wins pivot proof
+  higher seq with value+10                → last-write-wins Bronze proof
 """
 
 from __future__ import annotations
@@ -66,7 +66,7 @@ def generate_noaa_long(
     the repo's cross-engine hex15 mapping). At 100 TB this is the
     pattern for synthetic load generation too: ``spark.range``
     partitions the id space, every column derives locally, zero
-    shuffles before the pivot.
+    shuffles before the Bronze aggregate.
     """
     from weather_analysis_bigdata__spark.functions.textops import hex15_to_long
 
@@ -118,7 +118,7 @@ def generate_noaa_long(
     cols = ["date", "station", "latitude", "longitude", "datatype", "value"]
     first_write = present.select(*cols, F.col("id").alias("seq"), "h")
     # Late re-delivery of 1/11 of measurements with a perturbed value:
-    # the pivot's max_by(value, seq) must keep THESE rows.
+    # Bronze's max_by(value, seq) must keep THESE rows.
     rewrites = first_write.filter(F.col("h") % 11 == 0).select(
         *cols[:5],
         (F.col("value") + 10.0).alias("value"),

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 #: NOAA CDO v2 long-format record (one measurement per row) — the shape
-#: the API connector emits before the Bronze pivot (Weather_API.py:71-91).
+#: the API connector emits before the Bronze aggregate (Weather_API.py:71-91).
 #: ``seq`` is the ingest sequence number: it makes the reference's
 #: last-write-wins duplicate policy (dict overwrite, Weather_API.py:83-91)
 #: deterministic under any partitioning (max_by(value, seq)). Contract:
@@ -31,7 +31,7 @@ NOAA_LONG_SCHEMA = T.StructType(
     ]
 )
 
-#: NOAA datatype → fact column (pivot whitelist, Weather_API.py:34-45).
+#: NOAA datatype → fact column (Bronze whitelist, Weather_API.py:34-45).
 COLUMNS_MAPPING = {
     "PRCP": "precipitation",
     "SNOW": "snowfall",

@@ -424,8 +424,8 @@ def _sql_rehearsal_gen() -> str:
     doc="The reference's INTENDED dataset at EXPECTED_ROWS=100000 "
     "(Weather_API.py:24: 5 stations × 10 datatypes × 2000 days over "
     "1950–2021), generated DISTRIBUTED (spark.range, no driver rows) "
-    "and pushed through the real pipeline modules — bronze pivot with "
-    "last-write-wins re-deliveries, full-row dedup, broadcast dim join, "
+    "and pushed through the real pipeline modules — the Bronze grouped "
+    "aggregate with last-write-wins re-deliveries, broadcast dim join, "
     "window wind imputation, (min+max)/2 repair, fills, date parse, "
     "round — then aggregated per year with exact decimal sums. The "
     "oracle re-generates the identical 100k rows in SQL (same md5→int60 "

@@ -178,14 +178,7 @@ def pin_lazy(df):
     use when the first action is itself a multi-reference plan (e.g. a
     final union reading the pin 3×) — concurrent stages could
     duplicate the subtree's computation before the cache populates;
-    that is what :func:`pin` (eager) is for.
-
-    ``SPARK_GRAFT_PIN_LAZY=0`` reverts every lazy site to the eager
-    :func:`pin` — the A/B lever the round-12 measurements used, kept
-    so a deployment that prefers deterministic one-job-per-pin
-    scheduling can have it back without a code change."""
-    if os.environ.get("SPARK_GRAFT_PIN_LAZY", "1") == "0":
-        return pin(df)
+    that is what :func:`pin` (eager) is for."""
     if os.environ.get("SPARK_GRAFT_PIN_MODE", "local") == "reliable":
         from pyspark import StorageLevel
 
@@ -245,12 +238,8 @@ def pin_iter_probed(df):
     the predecessor. Reliable mode stays the eager reliable
     ``checkpoint()`` — a lazy reliable checkpoint computes its data
     twice (the classic caveat), and durability-before-release is the
-    whole point there. ``SPARK_GRAFT_PIN_LAZY=0`` restores the eager
-    local behavior (the A/B lever)."""
-    if (
-        os.environ.get("SPARK_GRAFT_PIN_MODE", "local") == "reliable"
-        or os.environ.get("SPARK_GRAFT_PIN_LAZY", "1") == "0"
-    ):
+    whole point there."""
+    if os.environ.get("SPARK_GRAFT_PIN_MODE", "local") == "reliable":
         return pin_iter(df)
     return df.localCheckpoint(eager=False)
 

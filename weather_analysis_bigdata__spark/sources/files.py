@@ -86,16 +86,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register all test tables as temp views for ``spark.sql`` queries."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def write_parquet(
     df: DataFrame,
     path: str,

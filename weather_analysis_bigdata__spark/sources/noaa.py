@@ -6,7 +6,7 @@ with 1 req/s throttling (Weather_API.py:48-112) — hours of wall time for
 a **partitioned fetch**: a (station, year) task table is distributed
 across executors and each partition pages its slice of the API via
 ``mapInPandas`` (SURVEY.md §2.1 S1). The emitted shape is the long
-format the Bronze pivot consumes (pipeline/schemas.NOAA_LONG_SCHEMA).
+format the Bronze aggregate consumes (pipeline/schemas.NOAA_LONG_SCHEMA).
 
 The HTTP layer is injectable: tests pass a fake ``http_get``; production
 uses ``requests`` if installed (import-gated — not baked into this
@@ -84,7 +84,7 @@ def distributed_ingest(
     """Fetch all (station, year) slices in parallel across executors.
 
     The task table is tiny; repartitioning it spreads API calls evenly.
-    Each output row carries a per-slice ``seq`` so the Bronze pivot's
+    Each output row carries a per-slice ``seq`` so the Bronze aggregate's
     last-write-wins policy is deterministic. At real scale the API is
     the bottleneck — executor count × politeness delay bounds load.
     """

@@ -11,9 +11,12 @@ for.
 Rendering strategy: **pure-Python SVG** (no third-party dependency).
 SVG is a real, viewable deliverable: line charts with axes and ticks,
 color-scaled heatmaps, and an *animated* geo map via SVG/SMIL
-``<animate>`` (the plotly ``animation_frame`` analogue). Each figure
-also gets a PNG twin from the dependency-free rasterizer in
-viz_raster.py.
+``<animate>`` (the plotly ``animation_frame`` analogue). This module
+is the only owner of figure geometry and colour: ``_SVG.save`` writes
+each figure's PNG twin by rasterizing the SVG text it just wrote
+(viz_raster.py), so the twin shows what the SVG shows. A raster cannot
+animate, so the geo map's twin shows the static first frame. Line
+charts also get an interactive HTML twin (viz_interactive.py).
 
 Scale note: every renderer consumes an already-aggregated DataFrame
 (O(stations×months) rows, not O(raw)); ``collect()`` here is the
@@ -27,11 +30,10 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
-from weather_analysis_bigdata__spark.viz_raster import (
-    png_heatmap,
-    png_lines,
-    png_scatter,
+from weather_analysis_bigdata__spark.viz_interactive import (
+    render_interactive_timeseries,
 )
+from weather_analysis_bigdata__spark.viz_raster import rasterize
 
 W, H = 800, 420  # canvas
 ML, MR, MT, MB = 60, 20, 30, 45  # margins
@@ -118,9 +120,12 @@ class _SVG:
             )
 
     def save(self, path: str) -> str:
+        """Write the SVG, then its PNG twin rasterized from the same text."""
         self.parts.append("</svg>")
+        text = "\n".join(self.parts)
         with open(path, "w", encoding="utf-8") as f:
-            f.write("\n".join(self.parts))
+            f.write(text)
+        rasterize(text, path.replace(".svg", ".png"))
         return path
 
 
@@ -139,11 +144,10 @@ def render_time_series(
     rows = series_df.collect()
     if not rows:
         raise ValueError("empty series")
-    xs = list(range(len(rows)))  # ordinal date axis; labels from x_col
-    all_y = [
-        float(r[c]) for r in rows for c in y_cols if r[c] is not None
-    ]
-    ylo, yhi = _scale(all_y)
+    series = {c: [r[c] for r in rows] for c in y_cols}
+    ylo, yhi = _scale(
+        [float(v) for vs in series.values() for v in vs if v is not None]
+    )
     svg = _SVG(title)
     svg.axes(0, max(len(rows) - 1, 1), ylo, yhi, x_fmt=lambda v: "")
     # date labels at the ends
@@ -155,13 +159,13 @@ def render_time_series(
         f'<text x="{ML + PW}" y="{MT + PH + 32}" text-anchor="end" '
         f'font-family="sans-serif" font-size="10">{_esc(rows[-1][x_col])}</text>'
     )
-    for ci, c in enumerate(y_cols):
+    for ci, (c, vs) in enumerate(series.items()):
         pts = []
-        for i, r in enumerate(rows):
-            if r[c] is None:
+        for i, v in enumerate(vs):
+            if v is None:
                 continue
-            x = ML + PW * xs[i] / max(len(rows) - 1, 1)
-            y = MT + PH - PH * (float(r[c]) - ylo) / (yhi - ylo)
+            x = ML + PW * i / max(len(rows) - 1, 1)
+            y = MT + PH - PH * (float(v) - ylo) / (yhi - ylo)
             pts.append(f"{x:.1f},{y:.1f}")
         color = _PALETTE[ci % len(_PALETTE)]
         svg.add(
@@ -172,22 +176,10 @@ def render_time_series(
             f'<text x="{ML + PW - 5}" y="{MT + 14 + 14 * ci}" text-anchor="end" '
             f'font-family="sans-serif" font-size="11" fill="{color}">{_esc(c)}</text>'
         )
-    png_lines(
-        path.replace(".svg", ".png"),
-        xs,
-        {c: [r[c] for r in rows] for c in y_cols},
-    )
     # Interactive HTML twin (hover + rangeslider — the plotly
     # interactions, dependency-free; viz_interactive.py).
-    from weather_analysis_bigdata__spark.viz_interactive import (
-        render_interactive_timeseries,
-    )
-
     render_interactive_timeseries(
-        path.replace(".svg", ".html"),
-        [r[x_col] for r in rows],
-        {c: [r[c] for r in rows] for c in y_cols},
-        title=title,
+        path.replace(".svg", ".html"), [r[x_col] for r in rows], series, title=title
     )
     return svg.save(path)
 
@@ -230,11 +222,6 @@ def render_trend(
         f'<text x="{ML + 8}" y="{MT + 14}" font-family="sans-serif" '
         f'font-size="11">slope={t.slope:.4f}/yr</text>'
     )
-    png_lines(path.replace(".svg", ".png"), years, {"mean": vals, "fit": fit})
-    from weather_analysis_bigdata__spark.viz_interactive import (
-        render_interactive_timeseries,
-    )
-
     render_interactive_timeseries(
         path.replace(".svg", ".html"),
         years,
@@ -285,7 +272,6 @@ def render_heatmap(
             f'text-anchor="middle" font-family="sans-serif" font-size="10">'
             f"{_esc(ck)}</text>"
         )
-    png_heatmap(path.replace(".svg", ".png"), r_keys, c_keys, vals)
     return svg.save(path)
 
 
@@ -360,20 +346,6 @@ def render_geo_map(
             for i, f in enumerate(frames)
         )
         + "</text>"
-    )
-    # PNG twin: a raster cannot animate, so it shows the last frame's
-    # scatter (size + color by value), the plotly animation's final state.
-    last = frames[-1]
-    last_vals = {sid: v for (sid, f), v in vals.items() if f == last}
-    lo = min(last_vals.values(), default=0.0)
-    span = (max(last_vals.values(), default=0.0) - lo) or 1.0
-    png_scatter(
-        path.replace(".svg", ".png"),
-        [
-            (lon, lat, (last_vals[sid] - lo) / span)
-            for sid, (lon, lat) in sorted(stations.items())
-            if sid in last_vals
-        ],
     )
     return svg.save(path)
 
