@@ -82,7 +82,7 @@ def test_bronze_one_row_per_date_station(bronze):
 def test_bronze_whitelist_filters_rogue_datatype(bronze):
     from weather_analysis_bigdata__spark.pipeline.schemas import COLUMNS_MAPPING
 
-    expected = {"date", "station", "latitude", "longitude", *COLUMNS_MAPPING.values()}
+    expected = {"date", "station", *COLUMNS_MAPPING.values()}
     assert set(bronze.columns) == expected
     assert ROGUE_DATATYPE not in bronze.columns
 
@@ -189,6 +189,37 @@ def test_silver_date_parse(silver):
     r = silver.select("date", "Date_1", "year").first()
     assert str(r.Date_1) == r.date[:10]
     assert r.year == int(r.date[:4])
+
+
+def test_silver_redelivery_with_revised_coordinates_resolves_by_seq(
+    spark, station_dim
+):
+    """A re-delivery whose landing coordinates differ from the first
+    delivery's is still the same (date, station): Silver keeps one row,
+    the seq-3 TMAX wins, and the average is derived from min and max.
+    Coordinates come from the station dim, not from the landing rows."""
+    from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
+    from weather_analysis_bigdata__spark.pipeline.schemas import NOAA_LONG_SCHEMA
+    from weather_analysis_bigdata__spark.pipeline.silver import build_silver
+
+    sid, _name, lat, lon = STATIONS[1]
+    date = "2024-02-03T00:00:00"
+    landing = spark.createDataFrame(
+        [
+            (date, sid, lat, lon, "TMIN", 4.0, 1),
+            (date, sid, lat, lon, "TMAX", 11.0, 2),
+            (date, sid, lat + 0.5, lon - 0.5, "TMAX", 13.0, 3),
+        ],
+        NOAA_LONG_SCHEMA,
+    )
+    rows = build_silver(build_bronze(landing), station_dim).collect()
+    assert len(rows) == 1, rows
+    (r,) = rows
+    assert (r.date, r.station) == (date, sid)
+    assert (r.latitude, r.longitude) == (lat, lon)
+    assert r.min_temperature == 4.0
+    assert r.max_temperature == 13.0
+    assert r.avg_temperature_rounded == pytest.approx(round((4.0 + 13.0) / 2, 2))
 
 
 def test_silver_write_is_one_sorted_file_per_year(spark, silver, tmp_path):

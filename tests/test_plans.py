@@ -121,7 +121,7 @@ def test_exchange_keys_names_bronze_group_keys(spark):
 
     long_df = spark.createDataFrame(noaa_long_rows(), NOAA_LONG_SCHEMA)
     keys = exchange_keys(plan_of(build_bronze(long_df)))
-    assert keys == [["date", "station", "latitude", "longitude"]]
+    assert keys == [["date", "station"]]
 
 
 def test_silver_hashes_on_year_and_window_reuses_it(spark):
@@ -141,7 +141,7 @@ def test_silver_hashes_on_year_and_window_reuses_it(spark):
     plan = plan_of(build_silver(build_bronze(long_df), dim))
     assert n_shuffles(plan) == 2, plan
     keys = exchange_keys(plan)
-    assert keys == [["date", "station", "latitude", "longitude"], ["year"]], keys
+    assert keys == [["date", "station"], ["year"]], keys
     assert n_sortmerge_joins(plan) == 0
 
 

@@ -78,7 +78,7 @@ def test_silver_imputation_total_and_correct(spark, tmin, tmax, tavg, wind):
     from weather_analysis_bigdata__spark.pipeline.silver import build_silver
 
     row = (
-        "2024-03-01T00:00:00", "GHCND:TEST", 40.0, -70.0,
+        "2024-03-01T00:00:00", "GHCND:TEST",
         None, None, None, tmax, tmin, tavg, wind, None, None, None,
     )
     bronze = spark.createDataFrame([row], WEATHER_WIDE_SCHEMA)

@@ -260,6 +260,15 @@ def test_interactive_html_twins(gallery):
         for ser in d["series"]:
             assert len(ser["values"]) == len(d["x"])
         assert "mousemove" in s and 'type="range"' in s
+        # one palette: each HTML series is drawn in its SVG twin's colour
+        svg = ET.parse(p.replace(".html", ".svg")).getroot()
+        if p.endswith("time_series.html"):
+            want = [pl.get("stroke") for pl in svg.findall(f".//{SVG_NS}polyline")]
+        else:  # trend: mean points, then the fit line
+            fit = [ln.get("stroke") for ln in svg.findall(f".//{SVG_NS}line")
+                   if ln.get("stroke") != "black"]
+            want = [svg.find(f".//{SVG_NS}circle").get("fill"), *fit]
+        assert [ser.get("color") for ser in d["series"]] == want, p
     node = shutil.which("node")
     if node is None:
         return  # structural checks stand alone

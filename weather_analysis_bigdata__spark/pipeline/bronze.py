@@ -6,15 +6,15 @@ Reference behavior reproduced (SURVEY.md §2.2 R1/R2):
   paging the NOAA API (Weather_API.py:76-91) — a manual PIVOT with
   last-write-wins on duplicate (date, station, datatype) keys — then
   ``drop_duplicates`` on the materialized frame (Weather_API.py:117-120).
-- Here both are one Spark aggregate grouped on (date, station, lat, lon)
-  with one conditional ``max_by`` per whitelisted datatype.
-  Last-write-wins is deterministic under any partitioning because it
-  orders on the ingest sequence number ``seq`` instead of an
-  order-dependent ``last()``.
-  The wide rows are unique on their group keys, so the reference's
-  full-row dedup has nothing left to remove.
+- Here both are one Spark aggregate on the same (date, station) key,
+  one conditional ``max_by`` per whitelisted datatype. Last-write-wins
+  orders on the ingest sequence number ``seq``, not an order-dependent
+  ``last()``, so it holds under any partitioning; the wide rows are
+  unique on their key, so the full-row dedup has nothing to remove.
+  No coordinates: the station dim owns them, so a re-delivery with
+  revised landing coordinates resolves by ``seq`` like any other.
 
-At 100 TB: one shuffle on the group keys (partial + final hash
+At 100 TB: one shuffle on (date, station) (partial + final hash
 aggregate); the aggregate state is 10 (value, seq) pairs per row.
 """
 
@@ -28,7 +28,7 @@ from weather_analysis_bigdata__spark.pipeline.schemas import COLUMNS_MAPPING
 
 def build_bronze(long_df: DataFrame) -> DataFrame:
     """NOAA long records (date, station, lat, lon, datatype, value, seq)
-    → one wide row per (date, station).
+    → one wide row per (date, station), without the landing coordinates.
 
     Only whitelisted datatypes survive (Weather_API.py:78). Duplicate
     (date, station, datatype) measurements resolve to the highest-seq
@@ -39,7 +39,7 @@ def build_bronze(long_df: DataFrame) -> DataFrame:
     """
     wide = (
         long_df.filter(F.col("datatype").isin(list(COLUMNS_MAPPING)))
-        .groupBy("date", "station", "latitude", "longitude")
+        .groupBy("date", "station")
         .agg(
             *(
                 F.max_by(

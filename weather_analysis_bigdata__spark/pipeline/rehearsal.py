@@ -28,7 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from weather_analysis_bigdata__spark.pipeline.schemas import STATION_SCHEMA
+from weather_analysis_bigdata__spark.pipeline.schemas import (
+    COLUMNS_MAPPING,
+    STATION_SCHEMA,
+)
 
 #: The reference's 5 station ids (Weather_API.py:25-31) with the public
 #: NOAA coordinates (API-station_data.csv shape).
@@ -40,8 +43,7 @@ REHEARSAL_STATIONS = [
     ("GHCND:USW00013874", "ATLANTA HARTSFIELD", 33.6301, -84.4418),
 ]
 
-DATATYPES = ("PRCP", "SNOW", "SNWD", "TMAX", "TMIN", "TAVG",
-             "AWND", "WSF2", "WDF2", "WT01")
+DATATYPES = tuple(COLUMNS_MAPPING)
 
 WIND_TYPES = ("AWND", "WSF2", "WDF2")
 

@@ -46,12 +46,12 @@ COLUMNS_MAPPING = {
 }
 
 #: Wide fact table — the declared Bronze schema (Weather_API.py:175-190).
+#: One row per (date, station), no coordinates: ``STATION_SCHEMA`` owns
+#: them, so a re-delivery with revised landing ones resolves by ``seq``.
 WEATHER_WIDE_SCHEMA = T.StructType(
     [
         T.StructField("date", T.StringType()),
         T.StructField("station", T.StringType()),
-        T.StructField("latitude", T.DoubleType()),
-        T.StructField("longitude", T.DoubleType()),
         T.StructField("precipitation", T.DoubleType()),
         T.StructField("snowfall", T.DoubleType()),
         T.StructField("snow_depth", T.DoubleType()),

@@ -2,8 +2,8 @@
 
 Reference transform chain (Weather_API.py:305-490), re-expressed:
 
-- drop stale lat/lon, re-attach from the station dim via a **broadcast**
-  left join (J1, Weather_API.py:305-327).
+- coordinates only from the station dim: one keyed **broadcast** left
+  join on ``station`` (J1, Weather_API.py:305-327).
 - wind imputation: the reference computes ``averages_by_year_location``
   and LEFT JOINs it back on (year, latitude, longitude), then chains
   CASE WHEN (Weather_API.py:344-371). Same semantics here as a **window
@@ -39,15 +39,10 @@ from weather_analysis_bigdata__spark.pipeline.schemas import SILVER_COLUMNS
 
 
 def join_station_dim(fact: DataFrame, dim: DataFrame) -> DataFrame:
-    """Re-attach lat/lon from the 5-row station dim (broadcast left join,
-    Weather_API.py:305-327)."""
-    f = fact.drop("latitude", "longitude").alias("data")
-    d = dim.alias("location")
-    return f.join(
-        F.broadcast(d),
-        F.col("data.station") == F.col("location.station_id"),
-        "left",
-    ).select("data.*", "location.latitude", "location.longitude")
+    """Attach lat/lon from the small station dim (broadcast left join on
+    ``station``, Weather_API.py:305-327)."""
+    coords = dim.select(F.col("station_id").alias("station"), "latitude", "longitude")
+    return fact.join(F.broadcast(coords), "station", "left")
 
 
 def impute_wind(df: DataFrame) -> DataFrame:

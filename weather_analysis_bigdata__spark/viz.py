@@ -144,9 +144,10 @@ def render_time_series(
     rows = series_df.collect()
     if not rows:
         raise ValueError("empty series")
-    series = {c: [r[c] for r in rows] for c in y_cols}
+    series = {c: (_PALETTE[ci % len(_PALETTE)], [r[c] for r in rows])
+              for ci, c in enumerate(y_cols)}
     ylo, yhi = _scale(
-        [float(v) for vs in series.values() for v in vs if v is not None]
+        [float(v) for _, vs in series.values() for v in vs if v is not None]
     )
     svg = _SVG(title)
     svg.axes(0, max(len(rows) - 1, 1), ylo, yhi, x_fmt=lambda v: "")
@@ -159,7 +160,7 @@ def render_time_series(
         f'<text x="{ML + PW}" y="{MT + PH + 32}" text-anchor="end" '
         f'font-family="sans-serif" font-size="10">{_esc(rows[-1][x_col])}</text>'
     )
-    for ci, (c, vs) in enumerate(series.items()):
+    for ci, (c, (color, vs)) in enumerate(series.items()):
         pts = []
         for i, v in enumerate(vs):
             if v is None:
@@ -167,7 +168,6 @@ def render_time_series(
             x = ML + PW * i / max(len(rows) - 1, 1)
             y = MT + PH - PH * (float(v) - ylo) / (yhi - ylo)
             pts.append(f"{x:.1f},{y:.1f}")
-        color = _PALETTE[ci % len(_PALETTE)]
         svg.add(
             f'<polyline fill="none" stroke="{color}" stroke-width="1.5" '
             f'points="{" ".join(pts)}"/>'
@@ -212,11 +212,11 @@ def render_trend(
 
     for yr, v in zip(years, vals):
         x, y = xy(yr, v)
-        svg.add(f'<circle cx="{x:.1f}" cy="{y:.1f}" r="4" fill="#1f77b4"/>')
+        svg.add(f'<circle cx="{x:.1f}" cy="{y:.1f}" r="4" fill="{_PALETTE[0]}"/>')
     (x1, y1), (x2, y2) = xy(years[0], fit[0]), xy(years[-1], fit[-1])
     svg.add(
         f'<line x1="{x1:.1f}" y1="{y1:.1f}" x2="{x2:.1f}" y2="{y2:.1f}" '
-        'stroke="#d62728" stroke-width="2"/>'
+        f'stroke="{_PALETTE[1]}" stroke-width="2"/>'
     )
     svg.add(
         f'<text x="{ML + 8}" y="{MT + 14}" font-family="sans-serif" '
@@ -225,7 +225,7 @@ def render_trend(
     render_interactive_timeseries(
         path.replace(".svg", ".html"),
         years,
-        {"mean": vals, "fit": fit},
+        {"mean": (_PALETTE[0], vals), "fit": (_PALETTE[1], fit)},
         title=title,
     )
     return svg.save(path)
@@ -396,11 +396,10 @@ def render_gallery(silver: DataFrame, station_dim: DataFrame, out_dir: str) -> l
             title="Station × month precipitation",
         )
     )
-    stations = silver.select("station", "latitude", "longitude").distinct()
     out.append(
         render_geo_map(
             gold.station_month_year_mean(silver, "avg_temperature_rounded"),
-            stations,
+            station_dim.withColumnRenamed("station_id", "station"),
             "avg_avg_temperature_rounded",
             os.path.join(out_dir, "geo_map.svg"),
         )

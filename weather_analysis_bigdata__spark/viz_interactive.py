@@ -53,7 +53,6 @@ const TIP = document.getElementById("tooltip");
 const LO = document.getElementById("lo"), HI = document.getElementById("hi");
 const W = 760, H = 380, ML = 50, MR = 15, MT = 15, MB = 35;
 const PW = W - ML - MR, PH = H - MT - MB;
-const COLORS = ["#1f77b4", "#ff7f0e", "#2ca02c", "#d62728", "#9467bd"];
 // labels/x values are data-derived strings injected via innerHTML —
 // escape them so markup in a label renders as text, never as nodes
 const esc = s => String(s).replace(/&/g, "&amp;").replace(/</g, "&lt;")
@@ -99,11 +98,11 @@ function render() {
       if (ser.values[i] === null) continue;
       pts.push(px(i).toFixed(1) + "," + py(ser.values[i]).toFixed(1));
     }
-    s += `<polyline fill="none" stroke="${COLORS[si % COLORS.length]}" ` +
+    s += `<polyline fill="none" stroke="${ser.color}" ` +
          `stroke-width="1.5" points="${pts.join(" ")}"/>` +
          `<text x="${ML + PW - 5}" y="${MT + 14 + 14 * si}" ` +
          `text-anchor="end" font-size="11" ` +
-         `fill="${COLORS[si % COLORS.length]}">${esc(ser.label)}</text>`;
+         `fill="${ser.color}">${esc(ser.label)}</text>`;
   });
   s += `<line id="xhair" x1="-10" y1="${MT}" x2="-10" ` +
        `y2="${MT + PH}" stroke="#888" stroke-dasharray="3,3"/>`;
@@ -144,16 +143,17 @@ def render_interactive_timeseries(
     title: str = "",
 ) -> str:
     """Write a self-contained interactive HTML line chart: ``series``
-    maps label → list of values (None for gaps), aligned to
+    maps label → (colour, values with None for gaps), aligned to
     ``x_labels``. Returns the path written."""
     data = {
         "x": [str(x) for x in x_labels],
         "series": [
             {
                 "label": str(lbl),
+                "color": color,
                 "values": [None if v is None else float(v) for v in vs],
             }
-            for lbl, vs in series.items()
+            for lbl, (color, vs) in series.items()
         ],
     }
     # '<' is escaped in the serialized JSON so a value containing
