@@ -74,12 +74,17 @@ def test_compact_small_files(spark, sf_dir, tmp_path):
     out = spark.read.parquet(dst)
     assert out.count() == n_rows
     # Disjoint per-file event_id ranges: clustered writes restore pruning.
+    # The rewrite goes through the layer sink, so its pages are zstd too.
     import pyarrow.parquet as pq
 
     ranges = []
     for r, _, fs in _os.walk(dst):
         for f in fs:
             if f.endswith(".parquet"):
+                meta = pq.ParquetFile(_os.path.join(r, f)).metadata
+                for rg in range(meta.num_row_groups):
+                    for c in range(meta.num_columns):
+                        assert meta.row_group(rg).column(c).compression == "ZSTD"
                 t = pq.read_table(_os.path.join(r, f), columns=["event_id"])
                 if t.num_rows:
                     col = t["event_id"].to_numpy()

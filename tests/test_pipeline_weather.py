@@ -222,10 +222,39 @@ def test_silver_redelivery_with_revised_coordinates_resolves_by_seq(
     assert r.avg_temperature_rounded == pytest.approx(round((4.0 + 13.0) / 2, 2))
 
 
+def test_silver_wind_mean_skips_stations_missing_from_dim(spark, station_dim):
+    """Two fact stations absent from the dim both get null coordinates;
+    only A reports wind. B must fall back to 0, not take A's value from
+    a shared (year, null, null) group (Weather_API.py:352-371 joins the
+    means back on coordinates, where null keys never match)."""
+    from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
+    from weather_analysis_bigdata__spark.pipeline.schemas import NOAA_LONG_SCHEMA
+    from weather_analysis_bigdata__spark.pipeline.silver import build_silver
+
+    date = "2024-03-01T00:00:00"
+    landing = spark.createDataFrame(
+        [
+            (date, "NODIM_A", 10.0, 20.0, "AWND", 50.0, 1),
+            (date, "NODIM_A", 10.0, 20.0, "TMAX", 12.0, 1),
+            (date, "NODIM_B", 30.0, 40.0, "TMAX", 14.0, 1),
+        ],
+        NOAA_LONG_SCHEMA,
+    )
+    rows = {
+        r.station: r for r in build_silver(build_bronze(landing), station_dim).collect()
+    }
+    assert set(rows) == {"NODIM_A", "NODIM_B"}
+    assert rows["NODIM_A"].latitude is None and rows["NODIM_B"].latitude is None
+    assert rows["NODIM_A"].avg_wind_speed == 50.0
+    assert rows["NODIM_B"].avg_wind_speed == 0.0
+    assert rows["NODIM_B"].wind_direction_2min == 0
+
+
 def test_silver_write_is_one_sorted_file_per_year(spark, silver, tmp_path):
     """The year-partitioned sink writes one file per year, its rows in
-    (station, Date_1) order. AQE coalescing is off so that a shuffle
-    spreading a year over several tasks would show as several files."""
+    (station, Date_1) order, every column chunk zstd-compressed. AQE
+    coalescing is off so that a shuffle spreading a year over several
+    tasks would show as several files."""
     import pyarrow.parquet as pq
 
     from weather_analysis_bigdata__spark.sources.files import write_parquet
@@ -241,6 +270,13 @@ def test_silver_write_is_one_sorted_file_per_year(spark, silver, tmp_path):
         t = pq.read_table(os.path.join(out, d, files[0]), columns=["station", "Date_1"])
         keys = list(zip(t.column("station").to_pylist(), t.column("Date_1").to_pylist()))
         assert len(keys) > 0 and keys == sorted(keys), d
+        meta = pq.ParquetFile(os.path.join(out, d, files[0])).metadata
+        codecs = {
+            meta.row_group(rg).column(c).compression
+            for rg in range(meta.num_row_groups)
+            for c in range(meta.num_columns)
+        }
+        assert codecs == {"ZSTD"}, (d, codecs)
 
 
 def test_rebuild_years_replaces_only_its_years(spark, station_dim, tmp_path):

@@ -145,6 +145,25 @@ def test_silver_hashes_on_year_and_window_reuses_it(spark):
     assert n_sortmerge_joins(plan) == 0
 
 
+def test_per_station_series_sorts_on_one_reducer(spark):
+    """A station's series ends in a single-partition exchange, not a
+    range shuffle on ``Date_1``: no sampling job scans Silver twice."""
+    from tests.fixtures import STATIONS, noaa_long_rows, station_dim_rows
+    from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
+    from weather_analysis_bigdata__spark.pipeline.gold import per_station_series
+    from weather_analysis_bigdata__spark.pipeline.schemas import (
+        NOAA_LONG_SCHEMA,
+        STATION_SCHEMA,
+    )
+    from weather_analysis_bigdata__spark.pipeline.silver import build_silver
+
+    long_df = spark.createDataFrame(noaa_long_rows(), NOAA_LONG_SCHEMA)
+    dim = spark.createDataFrame(station_dim_rows(), STATION_SCHEMA)
+    silver = build_silver(build_bronze(long_df), dim)
+    keys = exchange_keys(plan_of(per_station_series(silver, STATIONS[1][0])))
+    assert keys[-1] == [], keys
+
+
 def test_cached_layer_reads_from_memory(spark, sf_dir):
     """Materializing a layer with cache() must turn downstream scans
     into InMemoryTableScan — the §3.2 fix for the reference's

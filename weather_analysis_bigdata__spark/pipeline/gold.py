@@ -20,11 +20,17 @@ def per_station_series(
     )
 ) -> DataFrame:
     """Ordered time series for one station (Weather_API.py:522-529) —
-    parameterized instead of five copy-pasted cells (F1/P2/O1)."""
+    parameterized instead of five copy-pasted cells (F1/P2/O1).
+
+    Sorted on one reducer, not with a global ``orderBy``: a range sort
+    first runs a sampling job that scans the filtered Silver once more
+    to pick its bounds, while one station holds at most 366 rows a
+    year, so a single partition costs nothing at any scale."""
     return (
         silver.filter(F.col("station") == station)
         .select(*cols)
-        .orderBy("Date_1")
+        .repartition(1)
+        .sortWithinPartitions("Date_1")
     )
 
 

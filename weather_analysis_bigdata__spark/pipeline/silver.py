@@ -48,11 +48,17 @@ def join_station_dim(fact: DataFrame, dim: DataFrame) -> DataFrame:
 def impute_wind(df: DataFrame) -> DataFrame:
     """Group-mean imputation for avg_wind_speed / wind_direction_2min
     over (year, latitude, longitude), falling back to 0
-    (Weather_API.py:344-371 as a window + coalesce)."""
+    (Weather_API.py:344-371 as a window + coalesce).
+
+    Rows without coordinates (a station missing from the dim) get no
+    group mean: the reference joins the means back on the coordinates,
+    where null keys never match, so such rows fall back to 0 instead of
+    sharing one (year, null, null) group."""
     w = Window.partitionBy("year", "latitude", "longitude")
+    has_coords = F.col("latitude").isNotNull() & F.col("longitude").isNotNull()
     out = df
     for col, typ in (("avg_wind_speed", "double"), ("wind_direction_2min", "int")):
-        group_mean = F.avg(col).over(w)
+        group_mean = F.when(has_coords, F.avg(col).over(w))
         out = out.withColumn(
             col, F.coalesce(F.col(col), group_mean.cast(typ), F.lit(0).cast(typ))
         )

@@ -29,6 +29,7 @@ import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from weather_analysis_bigdata__spark.viz_interactive import (
     render_interactive_timeseries,
@@ -360,7 +361,7 @@ def render_gallery(silver: DataFrame, station_dim: DataFrame, out_dir: str) -> l
 
     os.makedirs(out_dir, exist_ok=True)
     out: list[str] = []
-    first_station = silver.select("station").orderBy("station").first().station
+    first_station = silver.agg(F.min("station")).first()[0]
     out.append(
         render_time_series(
             gold.per_station_series(silver, first_station),
