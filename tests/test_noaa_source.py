@@ -70,6 +70,44 @@ def test_station_metadata_lookup():
     assert rows[0][2] == 41.5
 
 
+
+def test_record_without_value_fails_naming_it(spark):
+    """A /data record with no ``value`` is not a reading of 0.0: the
+    ingest fails and names the station, date and datatype."""
+    from weather_analysis_bigdata__spark.sources.noaa import distributed_ingest
+
+    def http_get(url, params):
+        page = fake_http_get(url, params)
+        if params["offset"] == 1:
+            del page["results"][1]["value"]  # a whitelisted SNOW record
+        return page
+
+    rec = fake_http_get(
+        "cdo-web/api/v2/data",
+        {"stationid": "GHCND:X1", "startdate": "2020-01-01", "offset": 1, "limit": 2},
+    )["results"][1]
+    with pytest.raises(Exception, match="NOAA record without a value") as err:
+        distributed_ingest(spark, ["GHCND:X1"], [2020], http_get).collect()
+    assert f"station GHCND:X1, date {rec['date']}, datatype {rec['datatype']}" in str(
+        err.value
+    )
+
+
+def test_station_without_coordinates_is_not_placed_at_zero():
+    """A station lookup without coordinates yields ``None``, not
+    (0.0, 0.0) at Null Island."""
+    from weather_analysis_bigdata__spark.sources.noaa import station_metadata
+
+    def http_get(url, params):
+        meta = fake_http_get(url, params)
+        if url.endswith("GHCND:B"):
+            del meta["latitude"], meta["longitude"]
+        return meta
+
+    rows = station_metadata(["GHCND:A", "GHCND:B"], http_get)
+    assert rows[0][2:] == (41.5, -71.25)
+    assert rows[1][2:] == (None, None)
+
 def test_requests_layer_is_import_gated():
     from weather_analysis_bigdata__spark.sources import noaa
 

@@ -250,6 +250,24 @@ def test_silver_wind_mean_skips_stations_missing_from_dim(spark, station_dim):
     assert rows["NODIM_B"].wind_direction_2min == 0
 
 
+
+@pytest.mark.parametrize("date", ["2023/01/03", "2023-02-30T00:00:00"])
+def test_silver_malformed_date_fails_the_job(spark, station_dim, date):
+    """A date Silver cannot parse fails the job (ANSI casts, on by
+    default in Spark 4); it never becomes a silent null ``Date_1``."""
+    from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
+    from weather_analysis_bigdata__spark.pipeline.schemas import NOAA_LONG_SCHEMA
+    from weather_analysis_bigdata__spark.pipeline.silver import build_silver
+
+    sid, _name, lat, lon = STATIONS[0]
+    landing = spark.createDataFrame(
+        [(date, sid, lat, lon, "TMAX", 12.0, 1)], NOAA_LONG_SCHEMA
+    )
+    with pytest.raises(
+        Exception, match="CAST_INVALID_INPUT|CANNOT_PARSE_TIMESTAMP"
+    ):
+        build_silver(build_bronze(landing), station_dim).collect()
+
 def test_silver_write_is_one_sorted_file_per_year(spark, silver, tmp_path):
     """The year-partitioned sink writes one file per year, its rows in
     (station, Date_1) order, every column chunk zstd-compressed. AQE

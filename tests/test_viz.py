@@ -134,6 +134,26 @@ def test_geo_map_collects_its_frame_once(tmp_path):
     )
 
 
+def test_geo_map_skips_stations_without_coordinates(tmp_path):
+    """A dim row with a null coordinate cannot be placed: the map draws
+    the stations it can place and skips that one, instead of failing on
+    ``float(None)``."""
+    from weather_analysis_bigdata__spark.viz import render_geo_map
+
+    (a, _n, lat, lon), (b, *_rest) = STATIONS[:2]
+    frame = _CountingFrame(
+        [{"station": sid, "month_year": "2024-01", "v": 1.0} for sid in (a, b)]
+    )
+    stations = _CountingFrame(
+        [
+            {"station": a, "latitude": lat, "longitude": lon},
+            {"station": b, "latitude": 41.0, "longitude": None},
+        ]
+    )
+    path = render_geo_map(frame, stations, "v", str(tmp_path / "geo.svg"))
+    assert len(ET.parse(path).getroot().findall(f".//{SVG_NS}circle")) == 1
+
+
 def _png_pixels(path):
     """Decode a truecolor PNG twin into an (h, w, 3) uint8 array,
     checking it on the way: signature, CRC of every chunk, IHDR first
@@ -227,56 +247,45 @@ def test_png_twin_matches_its_svg(gallery):
 
 
 def test_interactive_html_twins(gallery):
-    """The time-series and trend figures gain self-contained interactive
-    HTML twins (hover + rangeslider — the reference's plotly
-    interactions, dependency-free). Structural check always; when node
-    is available (this container has it), the DOM-stub harness
-    actually drives the JS: initial render, hover tooltip resolution,
-    and slider-driven re-render."""
+    """The time series, the one figure the reference makes interactive,
+    gains a self-contained HTML twin (hover + rangeslider, the
+    reference's plotly interactions, dependency-free) that embeds its
+    SVG verbatim; the trend gets none. Structural check always; the
+    node DOM-stub harness drives the script on the embedded SVG: hover,
+    a narrowed window, and no y scale drawn by the script."""
     import json
     import os
     import re
     import shutil
     import subprocess
 
-    htmls = [
-        p.replace(".svg", ".html")
+    assert not any(
+        os.path.exists(p.replace(".svg", ".html"))
         for p in gallery
-        if p.endswith(("time_series.svg", "trend.svg"))
-    ]
-    assert len(htmls) == 2
-    for p in htmls:
-        assert os.path.exists(p), p
-        s = open(p, encoding="utf-8").read()
-        # self-contained: no external scripts/styles/CDN
-        assert "http://" not in s and "https://" not in s
-        m = re.search(
-            r'<script id="data" type="application/json">(.*?)</script>',
-            s,
-            re.S,
-        )
-        d = json.loads(m.group(1))
-        assert d["x"] and d["series"]
-        for ser in d["series"]:
-            assert len(ser["values"]) == len(d["x"])
-        assert "mousemove" in s and 'type="range"' in s
-        # one palette: each HTML series is drawn in its SVG twin's colour
-        svg = ET.parse(p.replace(".html", ".svg")).getroot()
-        if p.endswith("time_series.html"):
-            want = [pl.get("stroke") for pl in svg.findall(f".//{SVG_NS}polyline")]
-        else:  # trend: mean points, then the fit line
-            fit = [ln.get("stroke") for ln in svg.findall(f".//{SVG_NS}line")
-                   if ln.get("stroke") != "black"]
-            want = [svg.find(f".//{SVG_NS}circle").get("fill"), *fit]
-        assert [ser.get("color") for ser in d["series"]] == want, p
+        if not p.endswith("time_series.svg")
+    )
+    svg_path = next(p for p in gallery if p.endswith("time_series.svg"))
+    p = svg_path.replace(".svg", ".html")
+    s = open(p, encoding="utf-8").read()
+    svg = open(svg_path, encoding="utf-8").read()
+    assert svg in s  # the SVG's markup, verbatim: the drawing exists once
+    # self-contained: beyond the SVG's own namespace, no URL at all
+    assert "http" not in s.replace(svg, "")
+    m = re.search(
+        r'<script id="data" type="application/json">(.*?)</script>',
+        s,
+        re.S,
+    )
+    d = json.loads(m.group(1))
+    assert d["x"] and d["series"]
+    for ser in d["series"]:
+        assert len(ser["values"]) == len(d["x"])
+    assert "mousemove" in s and 'type="range"' in s
     node = shutil.which("node")
     if node is None:
-        return  # structural checks stand alone
+        pytest.skip("node not installed")
     harness = os.path.join(os.path.dirname(__file__), "interactive_harness.js")
-    for p in htmls:
-        out = subprocess.run(
-            [node, harness, p], capture_output=True, text=True, timeout=60
-        )
-        assert out.returncode == 0, out.stderr
-        assert "display: block" in out.stdout, out.stdout
-        assert "rerendered: true" in out.stdout, out.stdout
+    out = subprocess.run([node, harness, p], capture_output=True, text=True, timeout=60)
+    assert out.returncode == 0, out.stderr
+    for check in ("hover: ok", "window: ok", "static: ok"):
+        assert check in out.stdout, out.stdout

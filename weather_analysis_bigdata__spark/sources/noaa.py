@@ -103,14 +103,20 @@ def distributed_ingest(
                 ):
                     if rec.get("datatype") not in COLUMNS_MAPPING:
                         continue  # whitelist early: don't ship dead rows
+                    sid = rec.get("station", station)
+                    if rec.get("value") is None:  # no reading: never invent one
+                        raise ValueError(
+                            f"NOAA record without a value: station {sid}, "
+                            f"date {rec.get('date')}, datatype {rec['datatype']}"
+                        )
                     rows.append(
                         {
                             "date": rec.get("date"),
-                            "station": rec.get("station", station),
+                            "station": sid,
                             "latitude": rec.get("latitude"),
                             "longitude": rec.get("longitude"),
                             "datatype": rec["datatype"],
-                            "value": float(rec.get("value", 0.0)),
+                            "value": float(rec["value"]),
                             "seq": seq,
                         }
                     )
@@ -124,9 +130,10 @@ def distributed_ingest(
 
 def station_metadata(
     stations: list[str], http_get: HttpGet
-) -> list[tuple[str, str, float, float]]:
+) -> list[tuple[str, str, float | None, float | None]]:
     """Point lookups for the station dimension (Weather_API.py:245-267) —
-    a handful of rows; runs on the driver by design."""
+    a handful of rows; runs on the driver by design. A coordinate the
+    lookup lacks is ``None`` (Silver and the geo map handle it), not 0.0."""
     out = []
     for sid in stations:
         meta = http_get(
@@ -136,8 +143,8 @@ def station_metadata(
             (
                 sid,
                 meta.get("name", sid),
-                float(meta.get("latitude", 0.0)),
-                float(meta.get("longitude", 0.0)),
+                *(None if meta.get(k) is None else float(meta[k])
+                  for k in ("latitude", "longitude")),
             )
         )
     return out

@@ -15,8 +15,10 @@ color-scaled heatmaps, and an *animated* geo map via SVG/SMIL
 is the only owner of figure geometry and colour: ``_SVG.save`` writes
 each figure's PNG twin by rasterizing the SVG text it just wrote
 (viz_raster.py), so the twin shows what the SVG shows. A raster cannot
-animate, so the geo map's twin shows the static first frame. Line
-charts also get an interactive HTML twin (viz_interactive.py).
+animate, so the geo map's twin shows the static first frame. The
+per-station time series, the one figure the reference makes
+interactive, also gets an HTML twin that embeds this SVG verbatim and
+adds hover and a rangeslider on top of it (viz_interactive.py).
 
 Scale note: every renderer consumes an already-aggregated DataFrame
 (O(stations×months) rows, not O(raw)); ``collect()`` here is the
@@ -121,12 +123,13 @@ class _SVG:
             )
 
     def save(self, path: str) -> str:
-        """Write the SVG, then its PNG twin rasterized from the same text."""
+        """Write the SVG, then its PNG twin rasterized from the same text
+        (kept as ``self.text`` for the HTML twin)."""
         self.parts.append("</svg>")
-        text = "\n".join(self.parts)
+        self.text = "\n".join(self.parts)
         with open(path, "w", encoding="utf-8") as f:
-            f.write(text)
-        rasterize(text, path.replace(".svg", ".png"))
+            f.write(self.text)
+        rasterize(self.text, path.replace(".svg", ".png"))
         return path
 
 
@@ -145,10 +148,9 @@ def render_time_series(
     rows = series_df.collect()
     if not rows:
         raise ValueError("empty series")
-    series = {c: (_PALETTE[ci % len(_PALETTE)], [r[c] for r in rows])
-              for ci, c in enumerate(y_cols)}
+    series = {c: [r[c] for r in rows] for c in y_cols}
     ylo, yhi = _scale(
-        [float(v) for _, vs in series.values() for v in vs if v is not None]
+        [float(v) for vs in series.values() for v in vs if v is not None]
     )
     svg = _SVG(title)
     svg.axes(0, max(len(rows) - 1, 1), ylo, yhi, x_fmt=lambda v: "")
@@ -161,7 +163,8 @@ def render_time_series(
         f'<text x="{ML + PW}" y="{MT + PH + 32}" text-anchor="end" '
         f'font-family="sans-serif" font-size="10">{_esc(rows[-1][x_col])}</text>'
     )
-    for ci, (c, (color, vs)) in enumerate(series.items()):
+    for ci, (c, vs) in enumerate(series.items()):
+        color = _PALETTE[ci % len(_PALETTE)]
         pts = []
         for i, v in enumerate(vs):
             if v is None:
@@ -177,12 +180,14 @@ def render_time_series(
             f'<text x="{ML + PW - 5}" y="{MT + 14 + 14 * ci}" text-anchor="end" '
             f'font-family="sans-serif" font-size="11" fill="{color}">{_esc(c)}</text>'
         )
-    # Interactive HTML twin (hover + rangeslider — the plotly
-    # interactions, dependency-free; viz_interactive.py).
+    svg.save(path)
+    # Interactive HTML twin: this SVG plus hover and a rangeslider (the
+    # plotly interactions, dependency-free; viz_interactive.py).
     render_interactive_timeseries(
-        path.replace(".svg", ".html"), [r[x_col] for r in rows], series, title=title
+        path.replace(".svg", ".html"), svg.text, [r[x_col] for r in rows],
+        series, (ML, PW), title=title,
     )
-    return svg.save(path)
+    return path
 
 
 def render_trend(
@@ -222,12 +227,6 @@ def render_trend(
     svg.add(
         f'<text x="{ML + 8}" y="{MT + 14}" font-family="sans-serif" '
         f'font-size="11">slope={t.slope:.4f}/yr</text>'
-    )
-    render_interactive_timeseries(
-        path.replace(".svg", ".html"),
-        years,
-        {"mean": (_PALETTE[0], vals), "fit": (_PALETTE[1], fit)},
-        title=title,
     )
     return svg.save(path)
 
@@ -293,8 +292,10 @@ def render_geo_map(
     frames = sorted({r[frame_col] for r in frame_rows})
     if not frames:
         raise ValueError("no animation frames")
+    # A station without coordinates cannot be placed: it gets no marker.
     stations = {r["station"]: (float(r["longitude"]), float(r["latitude"]))
-                for r in station_df.collect()}
+                for r in station_df.collect()
+                if r["longitude"] is not None and r["latitude"] is not None}
     vals = {
         (r["station"], r[frame_col]): float(r[val_col])
         for r in frame_rows
