@@ -4,11 +4,15 @@ shuffle budgets, TakeOrdered top-k, column pruning)."""
 
 from __future__ import annotations
 
+import math
+import re
+
 import pytest
 
 from weather_analysis_bigdata__spark.plans.inspect import (
     exchange_keys,
     has_take_ordered,
+    jobs_and_stages,
     n_global_windows,
     n_broadcast_joins,
     n_shuffles,
@@ -162,6 +166,110 @@ def test_per_station_series_sorts_on_one_reducer(spark):
     silver = build_silver(build_bronze(long_df), dim)
     keys = exchange_keys(plan_of(per_station_series(silver, STATIONS[1][0])))
     assert keys[-1] == [], keys
+
+
+@pytest.fixture(scope="module")
+def written_silver(spark, tmp_path_factory):
+    """The fixture Silver written year-partitioned and read back with
+    ``spark.read.parquet``, the way a Gold request opens it."""
+    from tests.fixtures import noaa_long_rows, station_dim_rows
+    from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
+    from weather_analysis_bigdata__spark.pipeline.schemas import (
+        NOAA_LONG_SCHEMA,
+        STATION_SCHEMA,
+    )
+    from weather_analysis_bigdata__spark.pipeline.silver import build_silver
+    from weather_analysis_bigdata__spark.sources.files import write_parquet
+
+    long_df = spark.createDataFrame(noaa_long_rows(), NOAA_LONG_SCHEMA)
+    dim = spark.createDataFrame(station_dim_rows(), STATION_SCHEMA)
+    path = str(tmp_path_factory.mktemp("gold") / "silver")
+    write_parquet(build_silver(build_bronze(long_df), dim), path, ("year",))
+    return path
+
+
+def _gold_requests(silver):
+    """One DataFrame per Gold request kind, as the dashboard sends them."""
+    from pyspark.sql import functions as F
+
+    from tests.fixtures import STATIONS
+    from weather_analysis_bigdata__spark.pipeline import gold
+
+    return {
+        "yearly_mean_temperature": gold.yearly_mean_temperature(silver),
+        "yearly_trend": gold.yearly_trend(silver),
+        "station_month_mean": gold.station_month_mean(silver, "precipitation"),
+        "station_month_year_mean": gold.station_month_year_mean(
+            silver.filter(F.col("year") == 2024), "avg_temperature_rounded"
+        ),
+        "precipitation_temperature_corr": gold.precipitation_temperature_corr(
+            silver
+        ),
+        "per_station_series": gold.per_station_series(silver, STATIONS[1][0]),
+    }
+
+
+def _parallel(monkeypatch):
+    """Put every Silver above the one-task threshold, for this test only."""
+    from weather_analysis_bigdata__spark.sources import files
+
+    monkeypatch.setattr(files, "GATHER_MAX_BYTES", 0)
+
+
+def test_gold_on_small_silver_is_one_job_without_shuffle(spark, written_silver):
+    """Below the threshold every Gold request reads Silver in one task:
+    no Exchange, and the collect runs one job of one stage."""
+    requests = _gold_requests(spark.read.parquet(written_silver))
+    for name, df in requests.items():
+        plan = plan_of(df)
+        assert n_shuffles(plan) == 0, (name, plan)
+        assert jobs_and_stages(spark, df.collect) == (1, 1), name
+
+
+def test_gold_above_threshold_keeps_parallel_plan(
+    spark, written_silver, monkeypatch
+):
+    """Above the threshold the aggregates keep partial and final
+    HashAggregates around a shuffle (hashed on the group keys when there
+    are any), and the series keeps its single-partition exchange."""
+    _parallel(monkeypatch)
+    requests = _gold_requests(spark.read.parquet(written_silver))
+    series = requests.pop("per_station_series")
+    assert exchange_keys(plan_of(series))[-1] == []
+    for name, df in requests.items():
+        plan = plan_of(df)
+        assert n_shuffles(plan) >= 1, (name, plan)
+        assert len(re.findall(r"^\(\d+\) HashAggregate", plan, re.M)) >= 2, name
+    for name in requests.keys() - {"precipitation_temperature_corr"}:
+        assert any(exchange_keys(plan_of(requests[name]))), name
+
+
+def _close(a, b) -> bool:
+    if isinstance(a, float) and isinstance(b, float):
+        return math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-12)
+    return a == b
+
+
+def test_gold_answers_equal_on_one_task_and_parallel_paths(
+    spark, written_silver, monkeypatch
+):
+    """The one-task path gives the parallel path's answers; only the
+    order of float summation may differ."""
+    def answers():
+        return {
+            name: df.collect() if name == "per_station_series" else sorted(
+                df.collect(), key=lambda r: tuple(map(str, r))
+            )
+            for name, df in _gold_requests(spark.read.parquet(written_silver)).items()
+        }
+
+    one_task = answers()
+    _parallel(monkeypatch)
+    parallel = answers()
+    for name, rows in one_task.items():
+        assert rows and len(rows) == len(parallel[name]), name
+        for a, b in zip(rows, parallel[name]):
+            assert all(map(_close, a, b)), (name, a, b)
 
 
 def test_cached_layer_reads_from_memory(spark, sf_dir):

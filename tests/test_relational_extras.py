@@ -32,3 +32,19 @@ def test_gapfill_spine_dense_and_fill_total(spark, sf_dir):
     for series in by_user.values():
         days = sorted(r.day for r in series)
         assert len(days) == (days[-1] - days[0]).days + 1  # dense, no dups
+
+
+def test_revenue_partials_rejects_null_key(spark):
+    """A null grouping key dictionary-encodes to a null index, which
+    folded its row into another group: in one batch, (null, "a") was
+    summed into (1, "a"), two rows, with no error. It must fail the job."""
+    import pytest
+
+    from weather_analysis_bigdata__spark.functions.moneyops import revenue_partials
+
+    df = spark.createDataFrame(
+        [(1, "a", 10.0, 0.05), (None, "a", 20.0, 0.0), (2, "b", 30.0, 0.1)],
+        "l_orderkey INT, o_orderdate STRING, l_extendedprice DOUBLE, l_discount DOUBLE",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="null key column 'l_orderkey'"):
+        revenue_partials(df, ["l_orderkey", "o_orderdate"]).collect()

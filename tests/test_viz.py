@@ -154,6 +154,18 @@ def test_geo_map_skips_stations_without_coordinates(tmp_path):
     assert len(ET.parse(path).getroot().findall(f".//{SVG_NS}circle")) == 1
 
 
+def test_geo_map_without_placeable_stations_says_so(tmp_path):
+    """When no dim row has both coordinates there is no map to draw:
+    the error says so instead of ``min() arg is an empty sequence``."""
+    from weather_analysis_bigdata__spark.viz import render_geo_map
+
+    sid = STATIONS[0][0]
+    frame = _CountingFrame([{"station": sid, "month_year": "2024-01", "v": 1.0}])
+    stations = _CountingFrame([{"station": sid, "latitude": None, "longitude": None}])
+    with pytest.raises(ValueError, match="no station can be placed"):
+        render_geo_map(frame, stations, "v", str(tmp_path / "geo.svg"))
+
+
 def _png_pixels(path):
     """Decode a truecolor PNG twin into an (h, w, 3) uint8 array,
     checking it on the way: signature, CRC of every chunk, IHDR first

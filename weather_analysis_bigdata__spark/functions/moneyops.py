@@ -55,6 +55,11 @@ def revenue_partials(df: DataFrame, keys: list[str]) -> DataFrame:
                     "revenue_partials: null money column (non-null "
                     "contract, see round-11 advice)"
                 )
+            # A null key encodes to a null dictionary index, which would
+            # fold its rows into some other group.
+            for k in keys:
+                if b.column(b.schema.get_field_index(k)).null_count:
+                    raise ValueError(f"revenue_partials: null key column {k!r}")
             # Combined key index via per-column dictionary encoding.
             dicts = []
             combined = None

@@ -3,7 +3,8 @@
 ``plan_of`` captures ``explain("formatted")`` text; the predicates below
 encode the plan properties that matter at 100 TB: did the dim broadcast,
 did the filter reach the scan, how many shuffles, did top-k avoid a
-global sort, how narrow is the scan schema.
+global sort, how narrow is the scan schema. ``jobs_and_stages`` counts
+what an action actually ran.
 """
 
 from __future__ import annotations
@@ -11,8 +12,10 @@ from __future__ import annotations
 import contextlib
 import io
 import re
+import uuid
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 
 def plan_of(df: DataFrame) -> str:
@@ -20,6 +23,34 @@ def plan_of(df: DataFrame) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def jobs_and_stages(
+    spark: SparkSession, action: Callable[[], object]
+) -> tuple[int, int]:
+    """Run ``action()`` under a fresh job group and return the Spark jobs
+    it started and the stages among them that ran tasks (a stage skipped
+    because its shuffle output was reused runs none), as counted by
+    ``SparkContext.statusTracker()``. The caller's job group is restored
+    afterwards."""
+    sc = spark.sparkContext
+    group = f"jobs-and-stages-{uuid.uuid4().hex}"
+    previous = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(group, "jobs_and_stages")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", previous)
+    # The status store is fed asynchronously by the listener bus: let it
+    # take in the action's last task and job events before reading it.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+    stages = [
+        st.getStageInfo(s) for job in jobs if job is not None for s in job.stageIds
+    ]
+    ran = [s for s in stages if s and s.numCompletedTasks + s.numFailedTasks]
+    return len(jobs), len(ran)
 
 
 def _n_nodes(plan: str, op: str) -> int:

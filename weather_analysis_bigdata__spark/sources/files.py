@@ -63,6 +63,48 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     return df
 
 
+#: Planned input bytes at or below which ``gather_small_scan`` reads a
+#: frame in one task: below the measured CPU crossover (its docstring).
+GATHER_MAX_BYTES = 4 * 1024 * 1024
+
+
+def gather_small_scan(df: DataFrame) -> DataFrame:
+    """Read a SMALL input in one task, so an aggregate over it plans no
+    shuffle; leave a large one to the parallel plan. The mirror image of
+    ``spread_small_scan``.
+
+    A one-partition child satisfies every distribution an aggregate can
+    require, so ``coalesce(1)`` turns partial aggregate, Exchange, final
+    aggregate into one stage and one job, and cuts the per-job fixed
+    cost that dominates a Gold request over a small Silver. Above
+    ``GATHER_MAX_BYTES`` the frame is returned unchanged.
+
+    The size is the optimized plan's ``sizeInBytes`` statistic: for a
+    file scan it is the listed file bytes, known without running a job.
+    A filter does not shrink it (on a year-partitioned table the
+    partitions are pruned only at physical planning), so the decision
+    follows the whole table, the safe direction on a large one. A frame
+    with no size estimate (an in-memory ``createDataFrame``) reports
+    Long.MaxValue and keeps the parallel plan.
+
+    The threshold is a measured crossover, far below Spark's 128 MiB
+    ``files.maxPartitionBytes``. On 4 vCPUs, over year-partitioned
+    Silvers of N stations x 10 years from ``perfbench/gen.py``, one task
+    cost no more CPU (Python and JVM, JIT threads excluded; medians of
+    15 warm alternating runs) than the parallel plan for
+    ``yearly_mean_temperature`` and ``station_month_mean`` up to 160
+    stations (5.2 MB: 175 vs 221 ms, 299 vs 294 ms), but more from 240
+    stations (7.8 MB: station_month 398 vs 334 ms), and 1.6x the CPU and
+    3.3-3.7x the wall time at 9.3 M rows. Wall time crosses earlier:
+    station_month in one task is level at 40 stations (1.4 MB, 179 vs
+    180 ms), 18 % slower at 80 (2.7 MB) and 1.5x at 160. So the 4 MiB
+    threshold, below the CPU crossover, spends no more CPU per request;
+    a grouped request on a Silver near it may wait longer.
+    """
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return df.coalesce(1) if size <= GATHER_MAX_BYTES else df
+
+
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalize `events.ts` to a session-timezone TimestampType.
 

@@ -296,6 +296,8 @@ def render_geo_map(
     stations = {r["station"]: (float(r["longitude"]), float(r["latitude"]))
                 for r in station_df.collect()
                 if r["longitude"] is not None and r["latitude"] is not None}
+    if not stations:
+        raise ValueError("no station can be placed: none has both coordinates")
     vals = {
         (r["station"], r[frame_col]): float(r[val_col])
         for r in frame_rows
