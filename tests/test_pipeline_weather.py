@@ -121,6 +121,28 @@ def test_bronze_exact_redelivery_collapses(spark, bronze):
     assert once.exceptAll(bronze).count() == 0
 
 
+@pytest.mark.parametrize(
+    "field, bad, message",
+    [("date", None, "null date"), ("seq", None, "null seq"),
+     ("value", float("nan"), "NaN value")],
+)
+def test_bronze_bad_record_fails_the_job(spark, field, bad, message):
+    """A null ``date`` or ``seq`` or a NaN ``value`` fails the job; it
+    never becomes a null-date row, a dropped measurement or a NaN mean."""
+    from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
+    from weather_analysis_bigdata__spark.pipeline.schemas import NOAA_LONG_SCHEMA
+
+    sid, _name, lat, lon = STATIONS[0]
+    good = {"date": "2024-03-01T00:00:00", "station": sid, "latitude": lat,
+            "longitude": lon, "datatype": "TMAX", "value": 12.0, "seq": 1}
+    landing = spark.createDataFrame(
+        [tuple(good.values()), tuple({**good, "seq": 2, field: bad}.values())],
+        NOAA_LONG_SCHEMA,
+    )
+    with pytest.raises(Exception, match=message):
+        build_bronze(landing).collect()
+
+
 def test_bronze_types_match_declared_schema(bronze):
     types = dict(bronze.dtypes)
     assert types["wind_direction_2min"] == "int"
@@ -333,6 +355,68 @@ def test_rebuild_years_replaces_only_its_years(spark, station_dim, tmp_path):
     assert rebuilt.count() > 0
     assert rebuilt.exceptAll(fresh).count() == 0
     assert fresh.exceptAll(rebuilt).count() == 0
+
+
+def test_rebuild_years_prunes_a_year_partitioned_landing(
+    spark, station_dim, tmp_path, monkeypatch
+):
+    """On a landing hive-partitioned by year, the rebuild reads only its
+    years' directories (a partition filter on ``year``), its year equals
+    a fresh full build, and a record filed under another year than its
+    date's fails the job instead of dropping out."""
+    import math
+    from operator import attrgetter
+
+    from weather_analysis_bigdata__spark.pipeline import backfill
+    from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
+    from weather_analysis_bigdata__spark.pipeline.schemas import (
+        NOAA_LONG_SCHEMA,
+        SILVER_COLUMNS,
+    )
+    from weather_analysis_bigdata__spark.pipeline.silver import build_silver
+    from weather_analysis_bigdata__spark.plans.inspect import plan_of
+    from weather_analysis_bigdata__spark.sources.files import write_parquet
+
+    long_df = spark.createDataFrame(
+        noaa_long_rows(years=(2022, 2023, 2024)), NOAA_LONG_SCHEMA
+    )
+    landing = str(tmp_path / "landing")
+    write_parquet(long_df.withColumn("year", F.year("date")), landing, ("year",))
+    written = []
+    monkeypatch.setattr(
+        backfill, "write_parquet",
+        lambda df, *args, **kw: (written.append(df), write_parquet(df, *args, **kw)),
+    )
+    out = str(tmp_path / "silver")
+    backfill.rebuild_years(spark.read.parquet(landing), station_dim, out, [2023])
+
+    (scan,) = [
+        line for line in plan_of(written[0]).splitlines()
+        if line.startswith("PartitionFilters:")
+    ]
+    assert "year#" in scan, scan
+    key = attrgetter("station", "date")
+    rebuilt = sorted(spark.read.parquet(out).select(*SILVER_COLUMNS).collect(), key=key)
+    fresh = sorted(
+        build_silver(build_bronze(long_df), station_dim)
+        .filter(F.col("year") == 2023).collect(),
+        key=key,
+    )
+    assert rebuilt and len(rebuilt) == len(fresh)
+    for a, b in zip(rebuilt, fresh):
+        assert all(
+            math.isclose(x, y, rel_tol=1e-9) if isinstance(x, float) else x == y
+            for x, y in zip(a, b)
+        ), (a, b)
+
+    sid, _name, lat, lon = STATIONS[0]
+    misfiled = spark.createDataFrame(
+        [("2022-06-01T00:00:00", sid, lat, lon, "TMAX", 12.0, 10**9)],
+        NOAA_LONG_SCHEMA,
+    ).withColumn("year", F.lit(2023))
+    write_parquet(misfiled, landing, ("year",), mode="append")
+    with pytest.raises(Exception, match="filed under year=2023"):
+        backfill.rebuild_years(spark.read.parquet(landing), station_dim, out, [2023])
 
 
 # ------------------------------------------------------------------ Gold

@@ -272,6 +272,153 @@ def test_gold_answers_equal_on_one_task_and_parallel_paths(
             assert all(map(_close, a, b)), (name, a, b)
 
 
+@pytest.fixture(scope="module")
+def written_landing(spark, tmp_path_factory):
+    """The fixture long rows written as a landing hive-partitioned by
+    ``year``, the layout late batches are appended to."""
+    from pyspark.sql import functions as F
+
+    from tests.fixtures import noaa_long_rows
+    from weather_analysis_bigdata__spark.pipeline.schemas import NOAA_LONG_SCHEMA
+    from weather_analysis_bigdata__spark.sources.files import write_parquet
+
+    long_df = spark.createDataFrame(noaa_long_rows(), NOAA_LONG_SCHEMA)
+    path = str(tmp_path_factory.mktemp("landing") / "landing")
+    write_parquet(long_df.withColumn("year", F.year("date")), path, ("year",))
+    return path
+
+
+def _rebuilt_silver(spark, landing, years):
+    """Bronze and Silver of ``years`` of the written landing, read
+    through a filter on its partition column."""
+    from pyspark.sql import functions as F
+
+    from tests.fixtures import station_dim_rows
+    from weather_analysis_bigdata__spark.pipeline.bronze import build_bronze
+    from weather_analysis_bigdata__spark.pipeline.schemas import STATION_SCHEMA
+    from weather_analysis_bigdata__spark.pipeline.silver import build_silver
+
+    long_df = spark.read.parquet(landing).filter(F.col("year").isin(years))
+    dim = spark.createDataFrame(station_dim_rows(), STATION_SCHEMA)
+    return build_silver(build_bronze(long_df), dim)
+
+
+def test_small_rebuild_plans_no_shuffle(spark, written_landing, monkeypatch):
+    """Below the threshold Bronze and Silver over one landing year run
+    in one task: no shuffle Exchange, the dim still broadcast. Above it
+    the plan keeps its two shuffles, on (date, station) and on year."""
+    plan = plan_of(_rebuilt_silver(spark, written_landing, [2024]))
+    assert n_shuffles(plan) == 0, plan
+    assert n_broadcast_joins(plan) == 1, plan
+    _parallel(monkeypatch)
+    plan = plan_of(_rebuilt_silver(spark, written_landing, [2024]))
+    assert n_shuffles(plan) == 2, plan
+    assert exchange_keys(plan) == [["date", "station"], ["year"]]
+
+
+def test_small_rebuild_write_runs_fewer_jobs(
+    spark, written_landing, tmp_path, monkeypatch
+):
+    """The one-task rebuild writes its years in fewer jobs than the
+    parallel plan."""
+    from weather_analysis_bigdata__spark.sources.files import write_parquet
+
+    def jobs(out):
+        silver = _rebuilt_silver(spark, written_landing, [2023, 2024])
+        return jobs_and_stages(
+            spark, lambda: write_parquet(silver, str(tmp_path / out), ("year",))
+        )[0]
+
+    one_task = jobs("one_task")
+    _parallel(monkeypatch)
+    parallel = jobs("parallel")
+    assert one_task < parallel, (one_task, parallel)
+
+
+def test_one_task_silver_equals_parallel_silver(
+    spark, written_landing, monkeypatch
+):
+    """Silver from the one-task plan equals the parallel plan's; only
+    the float summation order of the wind means may differ."""
+    def rows():
+        df = _rebuilt_silver(spark, written_landing, [2023, 2024])
+        return n_shuffles(plan_of(df)), sorted(
+            df.collect(), key=lambda r: (r.station, r.date)
+        )
+
+    shuffles, one_task = rows()
+    assert shuffles == 0
+    _parallel(monkeypatch)
+    shuffles, parallel = rows()
+    assert shuffles == 2
+    assert one_task and len(one_task) == len(parallel)
+    for a, b in zip(one_task, parallel):
+        assert all(map(_close, a, b)), (a, b)
+
+
+def test_one_task_write_lands_one_sorted_zstd_file_per_year(
+    spark, written_landing, tmp_path
+):
+    """The one-task plan still writes one (station, Date_1)-sorted zstd
+    file per ``year=`` directory."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from weather_analysis_bigdata__spark.sources.files import write_parquet
+
+    silver = _rebuilt_silver(spark, written_landing, [2023, 2024])
+    assert n_shuffles(plan_of(silver)) == 0
+    out = str(tmp_path / "silver")
+    write_parquet(silver, out, ("year",))
+    parts = sorted(d for d in os.listdir(out) if d.startswith("year="))
+    assert parts == ["year=2023", "year=2024"]
+    for d in parts:
+        (name,) = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
+        f = pq.ParquetFile(os.path.join(out, d, name))
+        t = f.read(columns=["station", "Date_1"])
+        keys = list(zip(t.column("station").to_pylist(), t.column("Date_1").to_pylist()))
+        assert keys and keys == sorted(keys), d
+        meta = f.metadata
+        assert {
+            meta.row_group(rg).column(c).compression
+            for rg in range(meta.num_row_groups)
+            for c in range(meta.num_columns)
+        } == {"ZSTD"}, d
+
+
+def test_gather_small_scan_counts_pruned_bytes(
+    spark, written_landing, monkeypatch
+):
+    """With a threshold of one year's files, the whole landing stays
+    parallel, one partition-filtered year is gathered, and an in-memory
+    frame of unknown size stays parallel."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from weather_analysis_bigdata__spark.sources import files
+
+    def nbytes(root):
+        return sum(
+            os.path.getsize(os.path.join(d, f))
+            for d, _, fs in os.walk(root)
+            for f in fs
+            if f.endswith(".parquet")
+        )
+
+    one_year = nbytes(os.path.join(written_landing, "year=2024"))
+    assert nbytes(written_landing) > one_year
+    monkeypatch.setattr(files, "GATHER_MAX_BYTES", one_year)
+    landing = spark.read.parquet(written_landing)
+    assert files.gather_small_scan(landing) is landing
+    year = landing.filter(F.col("year") == 2024)
+    gathered = files.gather_small_scan(year)
+    assert gathered is not year and gathered.rdd.getNumPartitions() == 1
+    in_memory = spark.createDataFrame(landing.limit(3).collect(), landing.schema)
+    assert files.gather_small_scan(in_memory) is in_memory
+
+
 def test_cached_layer_reads_from_memory(spark, sf_dir):
     """Materializing a layer with cache() must turn downstream scans
     into InMemoryTableScan — the §3.2 fix for the reference's

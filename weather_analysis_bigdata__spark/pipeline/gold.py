@@ -9,7 +9,7 @@ of these outputs and deliberately out of engine scope.
 
 One stage when Silver is small: every aggregate reads its input through
 ``sources.files.gather_small_scan``, which coalesces a Silver of at most
-``GATHER_MAX_BYTES`` (4 MiB) planned file bytes to one partition. The
+``GATHER_MAX_BYTES`` (4 MiB) file bytes to one partition. The
 aggregate then plans no Exchange and a request runs as one job of one
 stage instead of scan, partial aggregate, shuffle and final aggregate in
 2-3 jobs. Above the threshold the parallel plan is kept. The threshold

@@ -63,8 +63,9 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     return df
 
 
-#: Planned input bytes at or below which ``gather_small_scan`` reads a
-#: frame in one task: below the measured CPU crossover (its docstring).
+#: File bytes, after partition pruning, at or below which
+#: ``gather_small_scan`` reads a frame in one task: below the measured
+#: CPU crossover (its docstring).
 GATHER_MAX_BYTES = 4 * 1024 * 1024
 
 
@@ -73,19 +74,24 @@ def gather_small_scan(df: DataFrame) -> DataFrame:
     shuffle; leave a large one to the parallel plan. The mirror image of
     ``spread_small_scan``.
 
-    A one-partition child satisfies every distribution an aggregate can
-    require, so ``coalesce(1)`` turns partial aggregate, Exchange, final
-    aggregate into one stage and one job, and cuts the per-job fixed
-    cost that dominates a Gold request over a small Silver. Above
-    ``GATHER_MAX_BYTES`` the frame is returned unchanged.
+    A one-partition child satisfies every distribution an aggregate or
+    window can require, so ``coalesce(1)`` turns partial aggregate,
+    Exchange, final aggregate into one stage and one job, and cuts the
+    per-job fixed cost that dominates a Gold request over a small Silver
+    or a rebuild of a few Silver years. Above ``GATHER_MAX_BYTES`` the
+    frame is returned unchanged.
 
-    The size is the optimized plan's ``sizeInBytes`` statistic: for a
-    file scan it is the listed file bytes, known without running a job.
-    A filter does not shrink it (on a year-partitioned table the
-    partitions are pruned only at physical planning), so the decision
-    follows the whole table, the safe direction on a large one. A frame
-    with no size estimate (an in-memory ``createDataFrame``) reports
-    Long.MaxValue and keeps the parallel plan.
+    The size is what the frame's file scans read after partition
+    pruning, known without running a job. The first test is the
+    optimized plan's free ``sizeInBytes`` statistic: for a file scan it
+    is the whole table's listed bytes, never less than pruning selects,
+    so a small table gathers at no extra cost. Only above the threshold
+    is the frame physically planned and ``selectedPartitions`` summed
+    over its file scans, so a filter on the partition column (a few
+    years of a year-partitioned landing) counts only the directories it
+    reads. A frame with any leaf that is not a file scan (an in-memory
+    ``createDataFrame``, a cached frame) has no known size there and
+    keeps the parallel plan.
 
     The threshold is a measured crossover, far below Spark's 128 MiB
     ``files.maxPartitionBytes``. On 4 vCPUs, over year-partitioned
@@ -100,9 +106,39 @@ def gather_small_scan(df: DataFrame) -> DataFrame:
     180 ms), 18 % slower at 80 (2.7 MB) and 1.5x at 160. So the 4 MiB
     threshold, below the CPU crossover, spends no more CPU per request;
     a grouped request on a Silver near it may wait longer.
+
+    A rebuild (Bronze, Silver and the year-partitioned write of k years
+    of a 40-station x 10-year ``gen.py`` landing) crosses later. CPU
+    medians of 8 warm alternating pairs on 4 vCPUs, from
+    ``tools/gather_crossover.py``:
+
+        landing read        parallel -> one task   one task wins
+        2.3 MB (2 years)    1,333 -> 1,190 ms      7/8
+        3.4 MB (3 years)    1,506 -> 1,184 ms      8/8
+        4.6 MB (4 years)    1,792 -> 1,415 ms      8/8
+        6.9 MB (6 years)    2,170 -> 1,871 ms      7/8
+        11.5 MB (10 years)  4,005 -> 3,220 ms      8/8
+
+    So one threshold serves both: below it one task is the cheaper plan
+    for a Gold request and for a rebuild alike.
+
+    The rule counts bytes, not rows. A Silver that compresses far better
+    than ``gen.py`` data fits more rows under the threshold than the
+    crossover allows: at 2.6 B/row (a tiled 640-station Silver), 4 MiB
+    holds about 1.6 M rows, while on ``gen.py`` data (9.6 B/row) the CPU
+    crossover lies between 584k and 876k rows.
     """
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    return df.coalesce(1) if size <= GATHER_MAX_BYTES else df
+    qe = df._jdf.queryExecution()
+    small = qe.optimizedPlan().stats().sizeInBytes() <= GATHER_MAX_BYTES
+    if not small:
+        leaves = qe.sparkPlan().collectLeaves()
+        scans = [leaves.apply(i) for i in range(leaves.size())]
+        small = all(
+            s.getClass().getSimpleName() == "FileSourceScanExec" for s in scans
+        ) and sum(
+            s.selectedPartitions().totalFileSize() for s in scans
+        ) <= GATHER_MAX_BYTES
+    return df.coalesce(1) if small else df
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
