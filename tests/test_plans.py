@@ -391,8 +391,9 @@ def test_gather_small_scan_counts_pruned_bytes(
     spark, written_landing, monkeypatch
 ):
     """With a threshold of one year's files, the whole landing stays
-    parallel, one partition-filtered year is gathered, and an in-memory
-    frame of unknown size stays parallel."""
+    parallel, one partition-filtered year is gathered, an in-memory
+    frame of unknown size stays parallel, and a materialized cache of
+    the same rows, whose statistic is its cached bytes, is gathered."""
     import os
 
     from pyspark.sql import functions as F
@@ -415,8 +416,16 @@ def test_gather_small_scan_counts_pruned_bytes(
     year = landing.filter(F.col("year") == 2024)
     gathered = files.gather_small_scan(year)
     assert gathered is not year and gathered.rdd.getNumPartitions() == 1
-    in_memory = spark.createDataFrame(landing.limit(3).collect(), landing.schema)
+    rows = landing.limit(3).collect()
+    in_memory = spark.createDataFrame(rows, landing.schema)
     assert files.gather_small_scan(in_memory) is in_memory
+    cached = spark.createDataFrame(rows, landing.schema).cache()
+    try:
+        cached.count()
+        gathered = files.gather_small_scan(cached)
+        assert gathered is not cached and gathered.rdd.getNumPartitions() == 1
+    finally:
+        cached.unpersist()
 
 
 def test_cached_layer_reads_from_memory(spark, sf_dir):

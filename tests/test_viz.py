@@ -166,6 +166,63 @@ def test_geo_map_without_placeable_stations_says_so(tmp_path):
         render_geo_map(frame, stations, "v", str(tmp_path / "geo.svg"))
 
 
+@pytest.mark.parametrize("figure", ["time_series", "heatmap", "geo_map"])
+def test_figure_with_nothing_to_plot_says_so(figure, tmp_path):
+    """A figure whose values are all null has no value range to scale:
+    the error says so instead of ``min() arg is an empty sequence``."""
+    from weather_analysis_bigdata__spark import viz
+
+    sid, _n, lat, lon = STATIONS[0]
+    rows = _CountingFrame(
+        [{"station": sid, "Date_1": "2024-01-01", "month": 1,
+          "month_year": "2024-01", "v": None}]
+    )
+    stations = _CountingFrame([{"station": sid, "latitude": lat, "longitude": lon}])
+    path = str(tmp_path / f"{figure}.svg")
+    draw = {
+        "time_series": lambda: viz.render_time_series(rows, "Date_1", ("v",), path),
+        "heatmap": lambda: viz.render_heatmap(rows, "station", "month", "v", path),
+        "geo_map": lambda: viz.render_geo_map(rows, stations, "v", path),
+    }[figure]
+    with pytest.raises(ValueError, match="no value can be plotted"):
+        draw()
+
+
+def test_marks_sit_on_their_axes(gallery):
+    """Every figure is placed through one plot box: the trend's first and
+    last years sit on the x axis's ends, and so do the fit line's ends;
+    every series point and geo marker lies inside the box; every label
+    is set in the same font."""
+    from weather_analysis_bigdata__spark.viz import ML, MT, PH, PW
+
+    def root(name):
+        return ET.parse(next(p for p in gallery if p.endswith(name))).getroot()
+
+    trend = root("trend.svg")
+    xs = [float(c.get("cx")) for c in trend.findall(f".//{SVG_NS}circle")]
+    assert len(xs) >= 2 and (xs[0], xs[-1]) == (ML, ML + PW)
+    (fit,) = [
+        ln for ln in trend.findall(f".//{SVG_NS}line")
+        if ln.get("stroke") == "#d62728"
+    ]
+    assert (float(fit.get("x1")), float(fit.get("x2"))) == (ML, ML + PW)
+
+    def inside(x, y):
+        return ML <= x <= ML + PW and MT <= y <= MT + PH
+
+    for pl in root("time_series.svg").findall(f".//{SVG_NS}polyline"):
+        for pt in pl.get("points").split():
+            assert inside(*map(float, pt.split(","))), pt
+    markers = root("geo_map.svg").findall(f".//{SVG_NS}circle")
+    assert markers
+    for c in markers:
+        assert inside(float(c.get("cx")), float(c.get("cy"))), c.attrib
+    for p in gallery:
+        texts = ET.parse(p).getroot().iter(f"{SVG_NS}text")
+        fonts = {t.get("font-family") for t in texts}
+        assert fonts == {"sans-serif"}, p
+
+
 def _png_pixels(path):
     """Decode a truecolor PNG twin into an (h, w, 3) uint8 array,
     checking it on the way: signature, CRC of every chunk, IHDR first

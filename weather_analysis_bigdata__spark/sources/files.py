@@ -85,13 +85,16 @@ def gather_small_scan(df: DataFrame) -> DataFrame:
     pruning, known without running a job. The first test is the
     optimized plan's free ``sizeInBytes`` statistic: for a file scan it
     is the whole table's listed bytes, never less than pruning selects,
-    so a small table gathers at no extra cost. Only above the threshold
-    is the frame physically planned and ``selectedPartitions`` summed
-    over its file scans, so a filter on the partition column (a few
-    years of a year-partitioned landing) counts only the directories it
-    reads. A frame with any leaf that is not a file scan (an in-memory
-    ``createDataFrame``, a cached frame) has no known size there and
-    keeps the parallel plan.
+    so a small table gathers at no extra cost. For a cache materialized
+    before the frame was planned it is the cached bytes, so such a frame
+    under the threshold is gathered too (the test fixture's Silver,
+    cached and counted: 44,346 B). Only above the threshold is the frame
+    physically planned and ``selectedPartitions`` summed over its file
+    scans, so a filter on the partition column (a few years of a
+    year-partitioned landing) counts only the directories it reads. A
+    frame that fails the first test and has any leaf that is not a file
+    scan (an in-memory ``createDataFrame``, whose statistic is unknown;
+    a large or not yet materialized cache) keeps the parallel plan.
 
     The threshold is a measured crossover, far below Spark's 128 MiB
     ``files.maxPartitionBytes``. On 4 vCPUs, over year-partitioned

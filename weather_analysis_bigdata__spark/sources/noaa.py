@@ -10,7 +10,9 @@ format the Bronze aggregate consumes (pipeline/schemas.NOAA_LONG_SCHEMA).
 
 The HTTP layer is injectable: tests pass a fake ``http_get``; production
 uses ``requests`` if installed (import-gated — not baked into this
-container). Politeness throttling is per-executor-task, configurable.
+container). Nothing throttles requests: each task pages its slices one
+request at a time, so the number of concurrently running tasks bounds
+the request rate.
 """
 
 from __future__ import annotations
@@ -86,7 +88,8 @@ def distributed_ingest(
     The task table is tiny; repartitioning it spreads API calls evenly.
     Each output row carries a per-slice ``seq`` so the Bronze aggregate's
     last-write-wins policy is deterministic. At real scale the API is
-    the bottleneck — executor count × politeness delay bounds load.
+    the bottleneck; the concurrently running tasks (one request in
+    flight each) bound the load on it.
     """
     tasks = [(s, y) for s in stations for y in years]
     n_parts = max(1, len(tasks) // tasks_per_partition)

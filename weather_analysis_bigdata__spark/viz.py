@@ -12,7 +12,10 @@ Rendering strategy: **pure-Python SVG** (no third-party dependency).
 SVG is a real, viewable deliverable: line charts with axes and ticks,
 color-scaled heatmaps, and an *animated* geo map via SVG/SMIL
 ``<animate>`` (the plotly ``animation_frame`` analogue). This module
-is the only owner of figure geometry and colour: ``_SVG.save`` writes
+is the only owner of figure geometry and colour. Within it, ``_SVG``
+owns the plot box: ``axes`` keeps the data→pixel maps (``x``, ``y``)
+that place every point, line and marker, and ``text`` builds every
+label's markup. ``_SVG.save`` writes
 each figure's PNG twin by rasterizing the SVG text it just wrote
 (viz_raster.py), so the twin shows what the SVG shows. A raster cannot
 animate, so the geo map's twin shows the static first frame. The
@@ -55,6 +58,8 @@ def _lerp_color(t: float) -> str:
 
 
 def _scale(vals: Sequence[float]) -> tuple[float, float]:
+    if not vals:
+        raise ValueError("no value can be plotted: every value is null")
     lo, hi = min(vals), max(vals)
     if lo == hi:  # degenerate axis: widen so points land mid-plot
         lo, hi = lo - 1.0, hi + 1.0
@@ -66,35 +71,49 @@ def _ticks(lo: float, hi: float, n: int = 5) -> list[float]:
 
 
 def _esc(s: object) -> str:
-    return (
-        str(s).replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-    )
+    return str(s).replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
+
+
+def _px(v: float) -> str:
+    """A pixel coordinate: a float to one decimal, an int as it is."""
+    return f"{v:.1f}" if isinstance(v, float) else str(v)
 
 
 class _SVG:
-    """Minimal SVG document builder (header, element append, save)."""
+    """One figure's SVG document and its plot box: ``axes`` sets the
+    data→pixel maps ``x`` and ``y`` that place every mark, and ``text``
+    builds every label."""
 
     def __init__(self, title: str, width: int = W, height: int = H) -> None:
         self.parts = [
             f'<svg xmlns="http://www.w3.org/2000/svg" width="{width}" '
             f'height="{height}" viewBox="0 0 {width} {height}">',
             f'<rect width="{width}" height="{height}" fill="white"/>',
-            f'<text x="{width / 2}" y="18" text-anchor="middle" '
-            f'font-family="sans-serif" font-size="14">{_esc(title)}</text>',
         ]
+        self.text(width / 2, 18, title, 14, "middle")
 
     def add(self, element: str) -> None:
         self.parts.append(element)
 
-    def axes(
-        self,
-        xlo: float,
-        xhi: float,
-        ylo: float,
-        yhi: float,
-        x_fmt=lambda v: f"{v:.0f}",
-        y_fmt=lambda v: f"{v:.1f}",
+    def text(
+        self, x: float, y: float, s: object, size: int = 10,
+        anchor: str | None = None, attrs: str = "",
     ) -> None:
+        """A label: ``s`` escaped, at pixel (x, y), ``attrs`` appended."""
+        a = f' text-anchor="{anchor}"' if anchor else ""
+        self.add(
+            f'<text x="{_px(x)}" y="{_px(y)}"{a} font-family="sans-serif" '
+            f'font-size="{size}"{attrs}>{_esc(s)}</text>'
+        )
+
+    def axes(
+        self, xlo: float, xhi: float, ylo: float, yhi: float,
+        x_fmt=lambda v: f"{v:.0f}", y_fmt=lambda v: f"{v:.1f}",
+    ) -> None:
+        """Draw the x and y axes with five ticks each, and keep their
+        data→pixel maps as ``self.x`` and ``self.y``."""
+        self.x = lambda v: ML + PW * (v - xlo) / (xhi - xlo)
+        self.y = lambda v: MT + PH - PH * (v - ylo) / (yhi - ylo)
         a = self.add
         a(
             f'<line x1="{ML}" y1="{MT + PH}" x2="{ML + PW}" y2="{MT + PH}" '
@@ -102,34 +121,28 @@ class _SVG:
         )
         a(f'<line x1="{ML}" y1="{MT}" x2="{ML}" y2="{MT + PH}" stroke="black"/>')
         for tv in _ticks(xlo, xhi):
-            x = ML + PW * (tv - xlo) / (xhi - xlo)
+            x = self.x(tv)
             a(
                 f'<line x1="{x:.1f}" y1="{MT + PH}" x2="{x:.1f}" '
                 f'y2="{MT + PH + 5}" stroke="black"/>'
             )
-            a(
-                f'<text x="{x:.1f}" y="{MT + PH + 18}" text-anchor="middle" '
-                f'font-family="sans-serif" font-size="10">{_esc(x_fmt(tv))}</text>'
-            )
+            self.text(x, MT + PH + 18, x_fmt(tv), anchor="middle")
         for tv in _ticks(ylo, yhi):
-            y = MT + PH - PH * (tv - ylo) / (yhi - ylo)
+            y = self.y(tv)
             a(
                 f'<line x1="{ML - 5}" y1="{y:.1f}" x2="{ML}" y2="{y:.1f}" '
                 'stroke="black"/>'
             )
-            a(
-                f'<text x="{ML - 8}" y="{y + 3:.1f}" text-anchor="end" '
-                f'font-family="sans-serif" font-size="10">{_esc(y_fmt(tv))}</text>'
-            )
+            self.text(ML - 8, y + 3, y_fmt(tv), anchor="end")
 
     def save(self, path: str) -> str:
         """Write the SVG, then its PNG twin rasterized from the same text
-        (kept as ``self.text`` for the HTML twin)."""
+        (kept as ``self.markup`` for the HTML twin)."""
         self.parts.append("</svg>")
-        self.text = "\n".join(self.parts)
+        self.markup = "\n".join(self.parts)
         with open(path, "w", encoding="utf-8") as f:
-            f.write(self.text)
-        rasterize(self.text, path.replace(".svg", ".png"))
+            f.write(self.markup)
+        rasterize(self.markup, path.replace(".svg", ".png"))
         return path
 
 
@@ -149,42 +162,28 @@ def render_time_series(
     if not rows:
         raise ValueError("empty series")
     series = {c: [r[c] for r in rows] for c in y_cols}
-    ylo, yhi = _scale(
-        [float(v) for vs in series.values() for v in vs if v is not None]
-    )
+    ys = [float(v) for vs in series.values() for v in vs if v is not None]
     svg = _SVG(title)
-    svg.axes(0, max(len(rows) - 1, 1), ylo, yhi, x_fmt=lambda v: "")
+    svg.axes(0, max(len(rows) - 1, 1), *_scale(ys), x_fmt=lambda v: "")
     # date labels at the ends
-    svg.add(
-        f'<text x="{ML}" y="{MT + PH + 32}" font-family="sans-serif" '
-        f'font-size="10">{_esc(rows[0][x_col])}</text>'
-    )
-    svg.add(
-        f'<text x="{ML + PW}" y="{MT + PH + 32}" text-anchor="end" '
-        f'font-family="sans-serif" font-size="10">{_esc(rows[-1][x_col])}</text>'
-    )
+    svg.text(ML, MT + PH + 32, rows[0][x_col])
+    svg.text(ML + PW, MT + PH + 32, rows[-1][x_col], anchor="end")
     for ci, (c, vs) in enumerate(series.items()):
         color = _PALETTE[ci % len(_PALETTE)]
-        pts = []
-        for i, v in enumerate(vs):
-            if v is None:
-                continue
-            x = ML + PW * i / max(len(rows) - 1, 1)
-            y = MT + PH - PH * (float(v) - ylo) / (yhi - ylo)
-            pts.append(f"{x:.1f},{y:.1f}")
+        pts = " ".join(
+            f"{svg.x(i):.1f},{svg.y(float(v)):.1f}"
+            for i, v in enumerate(vs) if v is not None
+        )
         svg.add(
             f'<polyline fill="none" stroke="{color}" stroke-width="1.5" '
-            f'points="{" ".join(pts)}"/>'
+            f'points="{pts}"/>'
         )
-        svg.add(
-            f'<text x="{ML + PW - 5}" y="{MT + 14 + 14 * ci}" text-anchor="end" '
-            f'font-family="sans-serif" font-size="11" fill="{color}">{_esc(c)}</text>'
-        )
+        svg.text(ML + PW - 5, MT + 14 + 14 * ci, c, 11, "end", f' fill="{color}"')
     svg.save(path)
     # Interactive HTML twin: this SVG plus hover and a rangeslider (the
     # plotly interactions, dependency-free; viz_interactive.py).
     render_interactive_timeseries(
-        path.replace(".svg", ".html"), svg.text, [r[x_col] for r in rows],
+        path.replace(".svg", ".html"), svg.markup, [r[x_col] for r in rows],
         series, (ML, PW), title=title,
     )
     return path
@@ -205,29 +204,18 @@ def render_trend(
     years = [r.year for r in rows]
     vals = [float(r.avg_temperature) for r in rows]
     fit = [t.intercept + t.slope * y for y in years]
-    xlo, xhi = _scale(years)
-    ylo, yhi = _scale(vals + fit)
     svg = _SVG(title)
-    svg.axes(xlo, xhi, ylo, yhi)
-
-    def xy(yr: float, v: float) -> tuple[float, float]:
-        return (
-            ML + PW * (yr - xlo) / (xhi - xlo),
-            MT + PH - PH * (v - ylo) / (yhi - ylo),
-        )
-
+    svg.axes(*_scale(years), *_scale(vals + fit))
+    x, y = svg.x, svg.y
     for yr, v in zip(years, vals):
-        x, y = xy(yr, v)
-        svg.add(f'<circle cx="{x:.1f}" cy="{y:.1f}" r="4" fill="{_PALETTE[0]}"/>')
-    (x1, y1), (x2, y2) = xy(years[0], fit[0]), xy(years[-1], fit[-1])
+        svg.add(f'<circle cx="{x(yr):.1f}" cy="{y(v):.1f}" r="4" '
+                f'fill="{_PALETTE[0]}"/>')
     svg.add(
-        f'<line x1="{x1:.1f}" y1="{y1:.1f}" x2="{x2:.1f}" y2="{y2:.1f}" '
+        f'<line x1="{x(years[0]):.1f}" y1="{y(fit[0]):.1f}" '
+        f'x2="{x(years[-1]):.1f}" y2="{y(fit[-1]):.1f}" '
         f'stroke="{_PALETTE[1]}" stroke-width="2"/>'
     )
-    svg.add(
-        f'<text x="{ML + 8}" y="{MT + 14}" font-family="sans-serif" '
-        f'font-size="11">slope={t.slope:.4f}/yr</text>'
-    )
+    svg.text(ML + 8, MT + 14, f"slope={t.slope:.4f}/yr", 11)
     return svg.save(path)
 
 
@@ -252,11 +240,7 @@ def render_heatmap(
     cw, ch = PW / len(c_keys), PH / len(r_keys)
     svg = _SVG(title)
     for ri, rk in enumerate(r_keys):
-        svg.add(
-            f'<text x="{ML - 8}" y="{MT + ch * (ri + 0.5) + 3:.1f}" '
-            f'text-anchor="end" font-family="sans-serif" font-size="10">'
-            f"{_esc(rk)}</text>"
-        )
+        svg.text(ML - 8, MT + ch * (ri + 0.5) + 3, rk, anchor="end")
         for ci, ck in enumerate(c_keys):
             v = vals.get((rk, ck))
             fill = _lerp_color((v - lo) / (hi - lo)) if v is not None else "#eee"
@@ -267,11 +251,7 @@ def render_heatmap(
                 f'stroke="white"><title>{_esc(tip)}</title></rect>'
             )
     for ci, ck in enumerate(c_keys):
-        svg.add(
-            f'<text x="{ML + cw * (ci + 0.5):.1f}" y="{MT + PH + 16}" '
-            f'text-anchor="middle" font-family="sans-serif" font-size="10">'
-            f"{_esc(ck)}</text>"
-        )
+        svg.text(ML + cw * (ci + 0.5), MT + PH + 16, ck, anchor="middle")
     return svg.save(path)
 
 
@@ -303,28 +283,18 @@ def render_geo_map(
         for r in frame_rows
         if r[val_col] is not None
     }
-    lons = [lon for lon, _ in stations.values()]
-    lats = [lat for _, lat in stations.values()]
-    xlo, xhi = _scale(lons)
-    ylo, yhi = _scale(lats)
     vlo, vhi = _scale(list(vals.values()))
+    lons, lats = zip(*stations.values())
     dur = len(frames)  # 1 s per frame
     svg = _SVG(f"{title} ({frames[0]} … {frames[-1]})")
-    svg.axes(xlo, xhi, ylo, yhi, x_fmt=lambda v: f"{v:.1f}", y_fmt=lambda v: f"{v:.1f}")
+    svg.axes(*_scale(lons), *_scale(lats), x_fmt=lambda v: f"{v:.1f}")
     for sid, (lon, lat) in sorted(stations.items()):
-        x = ML + PW * (lon - xlo) / (xhi - xlo)
-        y = MT + PH - PH * (lat - ylo) / (yhi - ylo)
-        per_frame = [vals.get((sid, f)) for f in frames]
+        x, y = svg.x(lon), svg.y(lat)
         # radius 4..14 px and blue→red color by value; missing frame → tiny grey
-        radii, colors = [], []
-        for v in per_frame:
-            if v is None:
-                radii.append("2")
-                colors.append("#bbb")
-            else:
-                t = (v - vlo) / (vhi - vlo)
-                radii.append(f"{4 + 10 * t:.1f}")
-                colors.append(_lerp_color(t))
+        per_frame = [vals.get((sid, f)) for f in frames]
+        ts = [None if v is None else (v - vlo) / (vhi - vlo) for v in per_frame]
+        radii = ["2" if t is None else f"{4 + 10 * t:.1f}" for t in ts]
+        colors = ["#bbb" if t is None else _lerp_color(t) for t in ts]
         svg.add(
             f'<circle cx="{x:.1f}" cy="{y:.1f}" r="{radii[0]}" '
             f'fill="{colors[0]}" fill-opacity="0.8">'
@@ -334,10 +304,7 @@ def render_geo_map(
             f'values="{";".join(colors)}"/>'
             f"</circle>"
         )
-        svg.add(
-            f'<text x="{x + 6:.1f}" y="{y - 6:.1f}" font-family="sans-serif" '
-            f'font-size="9">{_esc(sid)}</text>'
-        )
+        svg.text(x + 6, y - 6, sid, 9)
     # frame label cycling in sync with the markers
     svg.add(
         f'<text x="{ML + 8}" y="{MT + 16}" font-family="sans-serif" '
