@@ -6,10 +6,12 @@ from __future__ import annotations
 
 import io
 import contextlib
+import os
 import shutil
 import tempfile
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -94,20 +96,27 @@ def test_compact_small_files(spark, sf_dir, tmp_path):
         assert hi1 <= lo2
 
 
+def _parquet_files(path):
+    return [
+        os.path.join(r, f)
+        for r, _, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet")
+    ]
+
+
 def test_compaction_preserves_rows_and_shrinks_files(spark, sf_dir, tmp_path):
-    """compact_partitioned: a fragmented day-partitioned events layer
+    """compact_parquet on a fragmented day-partitioned events layer
     (8 writer tasks per partition) compacts to ~1 file per partition
     with identical rows — count and an order-independent content
-    fingerprint both survive; partition directories are unchanged."""
-    import os
+    fingerprint both survive; partition directories are unchanged, and
+    every page is written zstd by the layer sink."""
+    import pyarrow.parquet as pq
 
-    from pyspark.sql import functions as F
-
-    from weather_analysis_bigdata__spark.operators.compaction import (
-        compact_partitioned,
-        data_files,
+    from weather_analysis_bigdata__spark.sources.files import (
+        compact_parquet,
+        load_table,
     )
-    from weather_analysis_bigdata__spark.sources.files import load_table
 
     src = str(tmp_path / "frag")
     dst = str(tmp_path / "compact")
@@ -119,12 +128,18 @@ def test_compaction_preserves_rows_and_shrinks_files(spark, sf_dir, tmp_path):
     # fragment: 8 shuffle tasks each write a sliver of every partition
     ev.repartition(8).write.partitionBy("day").mode("overwrite").parquet(src)
     n_parts = ev.select("day").distinct().count()
-    assert len(data_files(src)) > 2 * n_parts  # genuinely fragmented
+    files_before = len(_parquet_files(src))
+    assert files_before > 2 * n_parts  # genuinely fragmented
 
-    stats = compact_partitioned(spark, src, dst, "day")
-    assert stats["files_before"] == len(data_files(src))
-    assert stats["files_after"] <= n_parts + 1  # ~one file per partition
-    assert stats["files_after"] < stats["files_before"] / 2
+    files_after = compact_parquet(spark, src, dst)
+    assert files_after == len(_parquet_files(dst))
+    assert files_after <= n_parts + 1  # ~one file per partition
+    assert files_after < files_before / 2
+    for path in _parquet_files(dst):
+        meta = pq.ParquetFile(path).metadata
+        for rg in range(meta.num_row_groups):
+            for c in range(meta.num_columns):
+                assert meta.row_group(rg).column(c).compression == "ZSTD", path
 
     def fingerprint(path):
         df = spark.read.parquet(path)
@@ -150,3 +165,23 @@ def test_compaction_preserves_rows_and_shrinks_files(spark, sf_dir, tmp_path):
         d for d in os.listdir(p) if d.startswith("day=")
     )
     assert parts(src) == parts(dst)
+
+
+def test_compaction_never_leaves_a_stale_partition(spark, tmp_path):
+    """A partitioned overwrite replaces only the partitions it writes, so
+    a partition left in the destination would survive the compaction as
+    rows the source does not hold: compact_parquet refuses a non-empty
+    destination and writes nothing."""
+    from weather_analysis_bigdata__spark.sources.files import compact_parquet
+
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst")
+    schema = "v int, day string"
+    spark.createDataFrame([(1, "2024-01-01"), (2, "2024-01-02")], schema).write \
+        .partitionBy("day").parquet(src)
+    spark.createDataFrame([(9, "1999-12-31")], schema).write \
+        .partitionBy("day").parquet(dst)
+
+    with pytest.raises(ValueError, match="not empty"):
+        compact_parquet(spark, src, dst)
+    assert [r.v for r in spark.read.parquet(dst).collect()] == [9]

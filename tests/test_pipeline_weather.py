@@ -461,3 +461,17 @@ def test_gold_station_remap(silver, station_dim):
     out = remap_station_names(silver.select("station").distinct(), station_dim)
     names = {r.station for r in out.collect()}
     assert names == {name for _sid, name, _la, _lo in STATIONS}
+
+
+def test_gold_station_remap_keeps_unmapped_ids_and_columns(spark, station_dim):
+    from weather_analysis_bigdata__spark.pipeline.gold import remap_station_names
+
+    sid, name, _la, _lo = STATIONS[0]
+    df = spark.createDataFrame(
+        [(1, sid, 2.5), (2, "UNMAPPED01", 3.5)], "month int, station string, v double"
+    )
+    out = remap_station_names(df, station_dim)
+    assert out.columns == df.columns
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, name, 2.5), (2, "UNMAPPED01", 3.5)
+    ]

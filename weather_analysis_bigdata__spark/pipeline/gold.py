@@ -91,16 +91,19 @@ def yearly_trend(silver: DataFrame) -> DataFrame:
 
 def remap_station_names(df: DataFrame, mapping: DataFrame) -> DataFrame:
     """station id → display name via broadcast join (the scalable form of
-    pandas .replace(station_mapping), Weather_API.py:1026-1033).
+    pandas .replace(station_mapping), Weather_API.py:1026-1033). A
+    station missing from ``mapping`` keeps its id; the columns and their
+    order are ``df``'s.
 
-    Aliased explicitly: ``df`` often shares lineage with ``mapping``
-    (the dim joined earlier in Silver), which otherwise trips Spark's
-    ambiguous-self-join detection."""
-    m = mapping.select(
-        F.col("station_id").alias("__map_id"), F.col("name").alias("__map_name")
-    )
-    return (
-        df.join(F.broadcast(m), df["station"] == m["__map_id"], "left")
-        .withColumn("station", F.coalesce(F.col("__map_name"), F.col("station")))
-        .drop("__map_id", "__map_name")
-    )
+    One USING join on ``station`` and one SQL projection: ``df`` often
+    shares lineage with ``mapping`` (the dim joined earlier in Silver),
+    and joining by column name never resolves an ambiguous reference, so
+    it needs no aliases (each Column-API call is a JVM round trip)."""
+    return df.join(
+        F.broadcast(mapping.selectExpr("station_id AS station", "name")),
+        "station",
+        "left",
+    ).selectExpr(*(
+        "coalesce(name, station) AS station" if c == "station" else f"`{c}`"
+        for c in df.columns
+    ))

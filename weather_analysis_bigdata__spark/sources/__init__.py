@@ -1,4 +1,2 @@
-from weather_analysis_bigdata__spark.sources.files import (  # noqa: F401
-    TABLES,
-    load_table,
-)
+"""Sources: Parquet files and the layer sink, the NOAA REST connector and
+the synthetic-weather Python DataSource."""

@@ -9,6 +9,7 @@ S3-S5) and a 100 TB table is read by executors, never the driver.
 
 from __future__ import annotations
 
+import math
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -207,38 +208,56 @@ def compact_parquet(
     sort_cols: list[str] | None = None,
 ) -> int:
     """Small-files compaction: rewrite a parquet directory into files
-    sized near ``target_file_bytes``, optionally range-clustered.
+    sized near ``target_file_bytes``, optionally range-clustered, into
+    an empty or absent ``dst_dir``.
 
     The 100 TB maintenance op streaming sinks and partition-overwrite
     backfills make necessary: thousands of KB-sized files turn scans
     into task-scheduling storms and wreck min/max skipping. Output file
     count is computed from the SOURCE's physical bytes (driver-side
-    file listing — metadata only, no data pass); with ``sort_cols`` the
-    rewrite is a ``repartitionByRange`` + ``sortWithinPartitions``, so
-    every output file covers a tight key range and parquet stats prune
-    again. Returns the number of files written.
-    """
-    import math
-    import os as _os
+    file listing — metadata only, no data pass). The same listing names
+    the source's hive partition columns (its ``k=v`` directories). The
+    rewrite is a ``repartitionByRange`` + ``sortWithinPartitions`` on
+    those columns and ``sort_cols``, so every output file covers a
+    tight key range and parquet stats prune again; a source with
+    neither is coalesced. It is written through ``write_parquet``: zstd
+    pages, and a partitioned source keeps its partition directories,
+    one file per partition per range task.
 
-    total = sum(
-        _os.path.getsize(_os.path.join(root, f))
-        for root, _, fs in _os.walk(src_dir)
-        for f in fs
-        if f.endswith(".parquet")
+    A partitioned overwrite replaces only the partitions written, so a
+    partition already in ``dst_dir`` and absent from the source would
+    survive as stale rows: a non-empty ``dst_dir`` raises instead.
+    Returns the number of files written.
+    """
+    if os.path.isdir(dst_dir) and os.listdir(dst_dir):
+        raise ValueError(f"compact_parquet: {dst_dir} is not empty")
+    files = _parquet_files(src_dir)
+    n_files = max(
+        1, math.ceil(sum(map(os.path.getsize, files)) / target_file_bytes)
     )
-    n_files = max(1, math.ceil(total / target_file_bytes))
+    parts = [
+        d.split("=", 1)[0]
+        for f in files[:1]
+        for d in os.path.relpath(os.path.dirname(f), src_dir).split(os.sep)
+        if "=" in d
+    ]
+    cluster = [*parts, *(sort_cols or ())]
     df = spark.read.parquet(src_dir)
-    if sort_cols:
-        df = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-            *sort_cols
+    if cluster:
+        df = df.repartitionByRange(n_files, *cluster).sortWithinPartitions(
+            *cluster
         )
     else:
         df = df.coalesce(n_files)
-    write_parquet(df, dst_dir)
-    return sum(
-        1
-        for _, _, fs in _os.walk(dst_dir)
+    write_parquet(df, dst_dir, partition_by=tuple(parts))
+    return len(_parquet_files(dst_dir))
+
+
+def _parquet_files(path: str) -> list[str]:
+    """Every ``.parquet`` file under ``path``, in a stable order."""
+    return sorted(
+        os.path.join(root, f)
+        for root, _, fs in os.walk(path)
         for f in fs
         if f.endswith(".parquet")
     )

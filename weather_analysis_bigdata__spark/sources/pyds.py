@@ -20,7 +20,23 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    InputPartition,
+    SimpleDataSourceStreamReader,
+)
+
+
+def _row(i: int, d: int) -> tuple:
+    """Station ``i``'s observation on day ``d``: integer-derived weather,
+    exactly reproducible anywhere."""
+    return (
+        f"STATION_{i}",
+        d,
+        ((i * 37 + d * 13) % 400 - 100) / 10.0,
+        ((i * 7 + d * 3) % 250) / 10.0,
+    )
 
 
 class StationPartition(InputPartition):
@@ -38,40 +54,7 @@ class SyntheticWeatherReader(DataSourceReader):
         return [StationPartition(i) for i in range(self.n_stations)]
 
     def read(self, partition: StationPartition) -> Iterator[tuple]:
-        i = partition.station_idx
-        for d in range(self.n_days):
-            # Integer-derived weather: exactly reproducible anywhere.
-            tmax = ((i * 37 + d * 13) % 400 - 100) / 10.0
-            prcp = ((i * 7 + d * 3) % 250) / 10.0
-            yield (f"STATION_{i}", d, tmax, prcp)
-
-
-class SyntheticWeatherDataSource(DataSource):
-    """``spark.read.format("synthetic_weather").option("days", N)``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "synthetic_weather"
-
-    def schema(self) -> str:
-        return "station string, day int, tmax_c double, prcp_mm double"
-
-    def reader(self, schema) -> DataSourceReader:
-        return SyntheticWeatherReader(self.options)
-
-
-def register_synthetic_weather(spark) -> None:
-    """Idempotent registration of the connector on a session."""
-    spark.dataSource.register(SyntheticWeatherDataSource)
-
-
-# ---------------------------------------------------------------------------
-# Streaming side: Spark 4 SimpleDataSourceStreamReader
-# ---------------------------------------------------------------------------
-try:  # pyspark 4 only
-    from pyspark.sql.datasource import SimpleDataSourceStreamReader
-except ImportError:  # pragma: no cover
-    SimpleDataSourceStreamReader = object  # type: ignore[assignment,misc]
+        return (_row(partition.station_idx, d) for d in range(self.n_days))
 
 
 class SyntheticWeatherStreamReader(SimpleDataSourceStreamReader):
@@ -93,42 +76,42 @@ class SyntheticWeatherStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"day": 0}
 
-    def _rows(self, d: int) -> list[tuple]:
-        return [
-            (
-                f"STATION_{i}",
-                d,
-                ((i * 37 + d * 13) % 400 - 100) / 10.0,
-                ((i * 7 + d * 3) % 250) / 10.0,
-            )
-            for i in range(self.n_stations)
-        ]
-
     def read(self, start: dict):
         d = start["day"]
         if d >= self.n_days:
             return iter([]), {"day": d}
-        return iter(self._rows(d)), {"day": d + 1}
+        return self.readBetweenOffsets(start, {"day": d + 1}), {"day": d + 1}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        out: list[tuple] = []
-        for d in range(start["day"], end["day"]):
-            out.extend(self._rows(d))
-        return iter(out)
+        return iter([
+            _row(i, d)
+            for d in range(start["day"], end["day"])
+            for i in range(self.n_stations)
+        ])
 
 
-class SyntheticWeatherStreamDataSource(DataSource):
-    """``spark.readStream.format("synthetic_weather_stream")``."""
+class SyntheticWeatherDataSource(DataSource):
+    """``spark.read.format("synthetic_weather").option("days", N)`` (365
+    days by default) and ``spark.readStream.format("synthetic_weather")``
+    (30 days by default): one schema and one row function for both."""
 
     @classmethod
     def name(cls) -> str:
-        return "synthetic_weather_stream"
+        return "synthetic_weather"
 
     def schema(self) -> str:
         return "station string, day int, tmax_c double, prcp_mm double"
 
+    def reader(self, schema) -> DataSourceReader:
+        return SyntheticWeatherReader(self.options)
+
     def simpleStreamReader(self, schema) -> SimpleDataSourceStreamReader:
         return SyntheticWeatherStreamReader(self.options)
+
+
+def register_synthetic_weather(spark) -> None:
+    """Idempotent registration of the connector on a session."""
+    spark.dataSource.register(SyntheticWeatherDataSource)
 
 
 def stream_weather_to_memory(
@@ -139,10 +122,10 @@ def stream_weather_to_memory(
     import time
     import uuid
 
-    spark.dataSource.register(SyntheticWeatherStreamDataSource)
+    register_synthetic_weather(spark)
     name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
     q = (
-        spark.readStream.format("synthetic_weather_stream")
+        spark.readStream.format("synthetic_weather")
         .option("stations", str(stations))
         .option("days", str(days))
         .load()
