@@ -475,3 +475,44 @@ def test_gold_station_remap_keeps_unmapped_ids_and_columns(spark, station_dim):
     assert sorted(tuple(r) for r in out.collect()) == [
         (1, name, 2.5), (2, "UNMAPPED01", 3.5)
     ]
+
+
+def _dim_listing_first_station(spark, station_id):
+    """The fixture dim plus a second row for its first station, with
+    ``station_id`` set to ``station_id``."""
+    from weather_analysis_bigdata__spark.pipeline.schemas import STATION_SCHEMA
+
+    _sid, name, lat, lon = station_dim_rows()[0]
+    return spark.createDataFrame(
+        [*station_dim_rows(), (station_id, name, lat + 1.0, lon)], STATION_SCHEMA
+    )
+
+
+def test_duplicated_dim_station_fails_the_silver_write(spark, bronze, tmp_path):
+    """A station listed twice in the dim fails the Silver write instead
+    of silently doubling that station's rows."""
+    from weather_analysis_bigdata__spark.pipeline.silver import build_silver
+    from weather_analysis_bigdata__spark.sources.files import write_parquet
+
+    dim = _dim_listing_first_station(spark, station_dim_rows()[0][0])
+    with pytest.raises(Exception, match="is listed 2 times"):
+        write_parquet(build_silver(bronze, dim), str(tmp_path / "s"), ("year",))
+
+
+def test_null_dim_station_ids_are_not_duplicates(spark, bronze, silver):
+    from weather_analysis_bigdata__spark.pipeline.silver import build_silver
+
+    dim = _dim_listing_first_station(spark, None)
+    dim = dim.unionByName(_dim_listing_first_station(spark, None).filter(
+        F.col("station_id").isNull()
+    ))
+    assert build_silver(bronze, dim).count() == silver.count()
+
+
+def test_duplicated_dim_station_fails_the_remap(spark, silver):
+    from weather_analysis_bigdata__spark.pipeline.gold import remap_station_names
+
+    dim = _dim_listing_first_station(spark, station_dim_rows()[0][0])
+    out = remap_station_names(silver.select("station").distinct(), dim)
+    with pytest.raises(Exception, match="is listed 2 times"):
+        out.collect()

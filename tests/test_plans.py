@@ -23,6 +23,16 @@ from weather_analysis_bigdata__spark.plans.inspect import (
 )
 
 
+@pytest.fixture(autouse=True)
+def empty_gold_memo():
+    """Gold plan and job assertions test the built plan: every test
+    starts from an empty memo, so each Gold request is a first sight."""
+    from weather_analysis_bigdata__spark.pipeline import gold
+
+    with gold._memo_lock:
+        gold._memo.clear()
+
+
 @pytest.fixture(scope="module")
 def registry():
     from weather_analysis_bigdata__spark.registry import all_queries

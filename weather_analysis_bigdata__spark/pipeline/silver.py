@@ -3,7 +3,8 @@
 Reference transform chain (Weather_API.py:305-490), re-expressed:
 
 - coordinates only from the station dim: one keyed **broadcast** left
-  join on ``station`` (J1, Weather_API.py:305-327).
+  join on ``station`` (J1, Weather_API.py:305-327); a ``station_id``
+  listed twice in the dim fails the job instead of doubling its rows.
 - wind imputation: the reference computes ``averages_by_year_location``
   and LEFT JOINs it back on (year, latitude, longitude), then chains
   CASE WHEN (Weather_API.py:344-371). Same semantics here as a **window
@@ -66,10 +67,31 @@ DERIVED = {
 }
 
 
+def station_dim_by_id(dim: DataFrame, *cols: str) -> DataFrame:
+    """The station dim keyed for a broadcast join: ``station`` (its
+    ``station_id``) and ``cols``, one row per id. A non-null
+    ``station_id`` listed twice fails the job instead of silently
+    doubling every row joined to it; null ids never match, so they are
+    not duplicates.
+
+    The dim is gathered to one task, so the grouping plans no shuffle,
+    and the check sits in the join key, so it runs inside the broadcast
+    job the join runs anyway: no extra job."""
+    return dim.coalesce(1).groupBy("station_id").agg(
+        F.expr(
+            "CASE WHEN station_id IS NOT NULL AND count(1) > 1 THEN raise_error("
+            "format_string('station dim: station_id %s is listed %d times', "
+            "station_id, count(1))) ELSE station_id END AS station"
+        ),
+        *(F.expr(f"any_value({c}) AS {c}") for c in cols),
+    ).drop("station_id")
+
+
 def join_station_dim(fact: DataFrame, dim: DataFrame) -> DataFrame:
     """Attach lat/lon from the small station dim (broadcast left join on
-    ``station``, Weather_API.py:305-327)."""
-    coords = dim.select(F.col("station_id").alias("station"), "latitude", "longitude")
+    ``station``, Weather_API.py:305-327); a duplicated ``station_id``
+    fails the job (``station_dim_by_id``)."""
+    coords = station_dim_by_id(dim, "latitude", "longitude")
     return fact.join(F.broadcast(coords), "station", "left")
 
 

@@ -36,6 +36,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from weather_analysis_bigdata__spark.pipeline import gold
 from weather_analysis_bigdata__spark.viz_interactive import (
     render_interactive_timeseries,
 )
@@ -267,14 +268,16 @@ def render_geo_map(
     ``animation_frame``): stations plotted at (longitude, latitude);
     each station's marker radius + color cycle through the per-frame
     values with SMIL ``<animate>``, 1 frame/second, looping — a real
-    animation in any browser, zero dependencies."""
+    animation in any browser, zero dependencies. ``station_df`` is read
+    through ``gold.served``, as a Gold answer is: a repeated map over an
+    unchanged dim file collects its stations with no job."""
     frame_rows = frame_df.collect()
     frames = sorted({r[frame_col] for r in frame_rows})
     if not frames:
         raise ValueError("no animation frames")
     # A station without coordinates cannot be placed: it gets no marker.
     stations = {r["station"]: (float(r["longitude"]), float(r["latitude"]))
-                for r in station_df.collect()
+                for r in gold.served(station_df).collect()
                 if r["longitude"] is not None and r["latitude"] is not None}
     if not stations:
         raise ValueError("no station can be placed: none has both coordinates")
@@ -327,8 +330,6 @@ def render_geo_map(
 def render_gallery(silver: DataFrame, station_dim: DataFrame, out_dir: str) -> list[str]:
     """Render the reference notebook's full figure set from gold
     aggregates into ``out_dir``; returns the file paths written."""
-    from weather_analysis_bigdata__spark.pipeline import gold
-
     os.makedirs(out_dir, exist_ok=True)
     out: list[str] = []
     first_station = silver.agg(F.min("station")).first()[0]
